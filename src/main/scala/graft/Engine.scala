@@ -2,18 +2,19 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** SparkSession factory for the graft engine.
+/** SparkSession factory for the warehouse.
   *
-  * Local mode here is `local[32]` (test box); on a real cluster the same
-  * settings apply with master/resources supplied by spark-submit. AQE is on
-  * so shuffle partition counts, skew joins and broadcast demotion re-plan at
-  * runtime — the knobs that matter at 100 TB.
+  * Local mode uses `SPARK_GRAFT_CPUS` cores when set, otherwise one per
+  * available processor; on a cluster the same settings apply with
+  * master/resources supplied by spark-submit. AQE is on so shuffle
+  * partition counts, skew joins and broadcast demotion re-plan at runtime.
   */
 object Engine {
   val ShufflePartitions = 32
 
   def session(appName: String = "graft"): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString)
     val spark = SparkSession
       .builder()
       .withExtensions(new graft.plans.GraftExtensions)

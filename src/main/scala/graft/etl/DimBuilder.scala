@@ -3,27 +3,20 @@ package graft.etl
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.DateType
 
 import graft.functions.DateParts
 
 /** Dimension builders (`loadAnalyticsDB.PractII.VarmaA.R:152-238`). */
 object DimBuilder {
 
-  /** dim_date: dense daily spine over the global [min,max] of the source
-    * dates (R:189-205) with the six derived parts (R:209-218). */
-  def dimDate(spark: SparkSession, txns: DataFrame): DataFrame = {
-    val bounds = txns
-      .agg(min(to_date(col("streaming_date"))).as("d1"),
-        max(to_date(col("streaming_date"))).as("d2"))
-    fromBoundsDf(bounds)
-  }
-
   /** dim_date from already-known bounds (e.g. the ETL's single-pass
-    * accounting aggregate carries min/max — no extra source scan). */
+    * accounting aggregate carries min/max — no extra source scan). Null
+    * bounds (empty or all-unparseable input) give an empty spine. */
   def dimDateFromBounds(spark: SparkSession, min: java.sql.Date,
       max: java.sql.Date): DataFrame = {
     val bounds = spark.range(1)
-      .select(lit(min).as("d1"), lit(max).as("d2"))
+      .select(lit(min).cast(DateType).as("d1"), lit(max).cast(DateType).as("d2"))
     fromBoundsDf(bounds)
   }
 
@@ -39,15 +32,6 @@ object DimBuilder {
   def dimCountry(countries: DataFrame): DataFrame =
     countries.select(col("country_id"), col("country").as("country_name"))
 
-  /** dim_sport: DISTINCT non-empty sports (R:175-181). The reference minted
-    * sport_id via MySQL AUTO_INCREMENT (non-reproducible); we pin it to
-    * name order (SURVEY §7 risk register). The unpartitioned window is safe:
-    * sport cardinality is tiny by construction. */
-  def dimSport(assets: DataFrame): DataFrame =
-    sportIds(assets
-      .filter(col("sport").isNotNull && col("sport") =!= "")
-      .select(col("sport").as("sport_name")))
-
   /** dim_sport covering BOTH the assets master and the sports that reached
     * the fact via prefix inference — without the inferred names, fact rows
     * whose sport exists only by inference would have no dimension row
@@ -59,6 +43,10 @@ object DimBuilder {
       .select(col("sport").as("sport_name"))
       .unionByName(fact.select(col("sport_name"))))
 
+  /** The reference minted sport_id via MySQL AUTO_INCREMENT
+    * (non-reproducible); we pin it to name order (SURVEY §7 risk register).
+    * The unpartitioned window is safe: sport cardinality is tiny by
+    * construction. */
   private def sportIds(names: DataFrame): DataFrame =
     names.distinct()
       .withColumn("sport_id", row_number().over(Window.orderBy("sport_name")))

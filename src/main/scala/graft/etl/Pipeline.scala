@@ -119,8 +119,12 @@ object Pipeline {
                 "concurrent action is still executing; retry finish() " +
                 "after it completes")
         }
+        // with AQE on, an empty input's stage is pruned together with its
+        // observation, which then resolves to a zero-length row: read it
+        // as zero counts (null unboxes to 0L) and null date bounds
         val m: Map[String, Any] =
-          row.schema.fieldNames.zip(row.toSeq).toMap
+          if (row.length == 0) Map.empty[String, Any].withDefaultValue(null)
+          else row.schema.fieldNames.zip(row.toSeq).toMap
         val stats = EtlStats(
           read = m("read").asInstanceOf[Long],
           missingCountry = m("missing_country").asInstanceOf[Long],
@@ -128,17 +132,9 @@ object Pipeline {
           missingSport = m("missing_sport").asInstanceOf[Long],
           missingDate = m("missing_date").asInstanceOf[Long],
           valid = m("valid").asInstanceOf[Long])
-        // empty/unparseable input: min/max come back null and the date
-        // spine is undefined — return an empty dim_date with the right
-        // schema instead of feeding null bounds into sequence() (NPE)
-        val minD = m("min_date").asInstanceOf[java.sql.Date]
-        val maxD = m("max_date").asInstanceOf[java.sql.Date]
-        val dimDate =
-          if (minD == null || maxD == null)
-            DimBuilder.dimDateFromBounds(spark,
-              java.sql.Date.valueOf("1970-01-01"),
-              java.sql.Date.valueOf("1970-01-01")).limit(0)
-          else DimBuilder.dimDateFromBounds(spark, minD, maxD)
+        val dimDate = DimBuilder.dimDateFromBounds(spark,
+          m("min_date").asInstanceOf[java.sql.Date],
+          m("max_date").asInstanceOf[java.sql.Date])
         (stats, dimDate)
       })
   }

@@ -156,6 +156,25 @@ class EtlPipelineSpec extends SparkTestBase {
     }
   }
 
+  test("empty input: both ETL forms give zero stats, an empty fact and dim_date") {
+    val empty = df(Schemas.streamingTxns)
+    val zero = Pipeline.EtlStats(0, 0, 0, 0, 0, 0)
+    val batch = Pipeline.run(
+      spark, empty, assets, subscribers, postal2city, cities, countries)
+    assert(batch.stats == zero)
+    assert(batch.fact.collect().isEmpty && batch.dimDate.collect().isEmpty)
+    Validate.all(batch.fact, expectedValidRows = 0)
+
+    val obs = Pipeline.runSinglePass(
+      spark, empty, assets, subscribers, postal2city, cities, countries)
+    assert(obs.fact.collect().isEmpty) // the action the observation rides on
+    val (stats, dimDate) = obs.finish()
+    assert(stats == zero)
+    assert(dimDate.collect().isEmpty)
+    assert(dimDate.columns.toSeq == result.dimDate.columns.toSeq)
+    Validate.all(obs.fact, expectedValidRows = 0)
+  }
+
   test("union of two sources aggregates identically to a single source (U1)") {
     val firstHalf = txns.filter(org.apache.spark.sql.functions.col("transaction_id") <= 6)
     val secondHalf = txns.filter(org.apache.spark.sql.functions.col("transaction_id") > 6)
