@@ -17,7 +17,6 @@ object Engine {
       Runtime.getRuntime.availableProcessors.toString)
     val spark = SparkSession
       .builder()
-      .withExtensions(new graft.plans.GraftExtensions)
       .master(s"local[$cpus]")
       .appName(appName)
       .config("spark.sql.shuffle.partitions", ShufflePartitions.toString)

@@ -50,22 +50,14 @@ object Pipeline {
     val enriched = Transform.enrich(txns, userCountryMap, assetSportMap)
     // one action over the source: retention stats AND the date bounds for
     // the dim_date spine come out of the same aggregate scan
-    val statsRow: Row = Transform.accounting(enriched).head()
-    val stats = EtlStats(
-      read = statsRow.getAs[Long]("read"),
-      missingCountry = statsRow.getAs[Long]("missing_country"),
-      recoveredByInference = statsRow.getAs[Long]("recovered_by_inference"),
-      missingSport = statsRow.getAs[Long]("missing_sport"),
-      missingDate = statsRow.getAs[Long]("missing_date"),
-      valid = statsRow.getAs[Long]("valid"))
+    val (stats, minDate, maxDate) = decodeAccounting(
+      Transform.accounting(enriched).head())
 
     val fact = Transform.rollup(Transform.qualityGate(enriched))
 
     EtlResult(
       fact = fact,
-      dimDate = DimBuilder.dimDateFromBounds(spark,
-        statsRow.getAs[java.sql.Date]("min_date"),
-        statsRow.getAs[java.sql.Date]("max_date")),
+      dimDate = DimBuilder.dimDateFromBounds(spark, minDate, maxDate),
       dimCountry = DimBuilder.dimCountry(countries),
       dimSport = DimBuilder.dimSport(assets, fact),
       stats = stats)
@@ -94,9 +86,9 @@ object Pipeline {
     // rejected at analysis time)
     val obs = org.apache.spark.sql.Observation()
     val enriched = Transform.enrich(txns, userCountryMap, assetSportMap)
-      .observe(obs, Transform.accountingAggs.head,
-        Transform.accountingAggs.tail: _*)
-    val fact = Transform.rollup(Transform.qualityGate(enriched))
+    val fact = Transform.rollup(Transform.qualityGate(
+      enriched.observe(obs, Transform.accountingAggs.head,
+        Transform.accountingAggs.tail: _*)))
     ObservedEtl(
       fact = fact,
       dimCountry = DimBuilder.dimCountry(countries),
@@ -119,23 +111,28 @@ object Pipeline {
                 "concurrent action is still executing; retry finish() " +
                 "after it completes")
         }
-        // with AQE on, an empty input's stage is pruned together with its
-        // observation, which then resolves to a zero-length row: read it
-        // as zero counts (null unboxes to 0L) and null date bounds
-        val m: Map[String, Any] =
-          if (row.length == 0) Map.empty[String, Any].withDefaultValue(null)
-          else row.schema.fieldNames.zip(row.toSeq).toMap
-        val stats = EtlStats(
-          read = m("read").asInstanceOf[Long],
-          missingCountry = m("missing_country").asInstanceOf[Long],
-          recoveredByInference = m("recovered_by_inference").asInstanceOf[Long],
-          missingSport = m("missing_sport").asInstanceOf[Long],
-          missingDate = m("missing_date").asInstanceOf[Long],
-          valid = m("valid").asInstanceOf[Long])
-        val dimDate = DimBuilder.dimDateFromBounds(spark,
-          m("min_date").asInstanceOf[java.sql.Date],
-          m("max_date").asInstanceOf[java.sql.Date])
-        (stats, dimDate)
+        // with AQE on, a load whose gated output is empty (no input, or
+        // every row dropped) has its plan replaced by an empty relation,
+        // and the observation goes with it: it resolves to a zero-length
+        // row. Only then, count the source in a pass of its own.
+        val (stats, minDate, maxDate) = decodeAccounting(
+          if (row.length > 0) row else Transform.accounting(enriched).head())
+        (stats, DimBuilder.dimDateFromBounds(spark, minDate, maxDate))
       })
+  }
+
+  /** The one decoder of a [[Transform.accountingAggs]] row: the stats and
+    * the source's min/max `event_date`. Over no rows the sums are NULL,
+    * which unboxes to 0L. */
+  private def decodeAccounting(row: Row): (EtlStats, java.sql.Date, java.sql.Date) = {
+    def n(field: String): Long = row.getAs[Long](field)
+    val stats = EtlStats(
+      read = n("read"),
+      missingCountry = n("missing_country"),
+      recoveredByInference = n("recovered_by_inference"),
+      missingSport = n("missing_sport"),
+      missingDate = n("missing_date"),
+      valid = n("valid"))
+    (stats, row.getAs[java.sql.Date]("min_date"), row.getAs[java.sql.Date]("max_date"))
   }
 }

@@ -1,6 +1,6 @@
 package graft.etl
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.functions.{DateParts, SportInference}
@@ -48,25 +48,20 @@ object Transform {
     * with the prefix inference) and parsed `event_date` — drop/keep
     * decisions are NOT applied here so accounting can see every row.
     *
-    * `broadcastMaps` (default true) hints both lookup joins: the maps are
-    * bounded dimension lookups by design (the reference held them in
-    * driver memory), and without the hint the big-side shuffles double the
-    * ETL wall-clock. Pass false when the subscriber base outgrows executor
-    * memory — a hint is never demoted, so at that scale the caller must
-    * say so, and AQE will still promote small sides back to broadcast at
-    * runtime. */
+    * Both lookup joins are broadcast: the maps are bounded dimension
+    * lookups by design (the reference held them in memory), and
+    * without the hint the big-side shuffles double the ETL wall-clock. */
   def enrich(txns: DataFrame, userCountryMap: DataFrame,
-      assetSportMap: DataFrame, broadcastMaps: Boolean = true): DataFrame = {
-    val (uc, as) =
-      if (broadcastMaps) (broadcast(userCountryMap), broadcast(assetSportMap))
-      else (userCountryMap, assetSportMap)
+      assetSportMap: DataFrame): DataFrame =
     txns
-      .join(uc, Seq("user_id"), "left")
-      .join(as, Seq("asset_id"), "left")
+      .join(broadcast(userCountryMap), Seq("user_id"), "left")
+      .join(broadcast(assetSportMap), Seq("asset_id"), "left")
       .withColumn("sport",
         coalesce(col("sport_master"), SportInference.inferSport(col("asset_id"))))
-      .withColumn("event_date", to_date(col("streaming_date")))
-  }
+      // try_cast, not to_date: under ANSI mode (Spark 4's default) a
+      // malformed date would fail the whole load; here it reads as NULL
+      // and the quality gate drops it as a missing date
+      .withColumn("event_date", col("streaming_date").try_cast("date"))
 
   /** P3: the referential-integrity gate — keep rows whose country, sport
     * and date all resolved; P4: null→0 fill on the measures. */
@@ -84,7 +79,7 @@ object Transform {
   /** THE accounting aggregate list — shared by the standalone pass
     * ([[accounting]]) and the observed single-pass form
     * (`Pipeline.runSinglePass`), so the two can never drift. */
-  val accountingAggs: Seq[org.apache.spark.sql.Column] = Seq(
+  val accountingAggs: Seq[Column] = Seq(
     count(lit(1)).as("read"),
     sum(when(col("country_id").isNull, 1L).otherwise(0L)).as("missing_country"),
     sum(when(col("sport_master").isNull && col("sport").isNotNull, 1L)
@@ -104,36 +99,23 @@ object Transform {
     * of raw user ids is too expensive, and the only mergeable form for
     * pure streaming aggregation. `rsd` is the relative standard deviation
     * (default 5%, ~1.5 KB of sketch per grain row). */
-  def rollupApprox(valid: DataFrame, rsd: Double = 0.05): DataFrame = {
-    val grain = valid
-      .groupBy(col("event_date"), col("country_id"), col("sport").as("sport_name"))
-      .agg(
-        count(lit(1)).as("transaction_count"),
-        approx_count_distinct(col("user_id"), rsd).as("unique_user_count"),
-        sum(col("minutes_streamed").cast("long")).as("total_minutes_streamed"),
-        sum(col("completed").cast("long")).as("completed_streams"))
-      .withColumn("avg_minutes_per_stream",
-        when(col("transaction_count") > 0,
-          round(col("total_minutes_streamed").cast("double") /
-            col("transaction_count"), 2)).otherwise(0.0))
-    DateParts.withDateParts(grain, col("event_date"))
-      .select(
-        col("date_id"), col("country_id"), col("sport_name"),
-        col("transaction_count"), col("unique_user_count"),
-        col("total_minutes_streamed"), col("completed_streams"),
-        col("avg_minutes_per_stream"),
-        col("year"), col("quarter"), col("month"), col("week"))
-  }
+  def rollupApprox(valid: DataFrame, rsd: Double = 0.05): DataFrame =
+    rollupWith(valid, approx_count_distinct(col("user_id"), rsd))
 
   /** A1+A2+P7: the daily-grain rollup with exact distinct users (declared
     * semantic, SURVEY §5.2) and the stored ratio-of-sums average; date
     * parts denormalized into the fact (createStarSchema R:144-147). */
-  def rollup(valid: DataFrame): DataFrame = {
+  def rollup(valid: DataFrame): DataFrame =
+    rollupWith(valid, countDistinct(col("user_id")))
+
+  /** The rollup body shared by [[rollup]] and [[rollupApprox]]; they differ
+    * only in the aggregate that counts `unique_user_count`. */
+  private def rollupWith(valid: DataFrame, distinctUsers: Column): DataFrame = {
     val grain = valid
       .groupBy(col("event_date"), col("country_id"), col("sport").as("sport_name"))
       .agg(
         count(lit(1)).as("transaction_count"),
-        countDistinct(col("user_id")).as("unique_user_count"),
+        distinctUsers.as("unique_user_count"),
         sum(col("minutes_streamed").cast("long")).as("total_minutes_streamed"),
         sum(col("completed").cast("long")).as("completed_streams"))
       .withColumn("avg_minutes_per_stream",

@@ -7,7 +7,6 @@ import org.scalatest.funsuite.AnyFunSuite
 trait SparkTestBase extends AnyFunSuite {
   lazy val spark: SparkSession = {
     val s = SparkSession.builder()
-      .withExtensions(new graft.plans.GraftExtensions)
       .master("local[4]")
       .appName(getClass.getSimpleName)
       .config("spark.sql.shuffle.partitions", "4")

@@ -156,23 +156,37 @@ class EtlPipelineSpec extends SparkTestBase {
     }
   }
 
-  test("empty input: both ETL forms give zero stats, an empty fact and dim_date") {
-    val empty = df(Schemas.streamingTxns)
-    val zero = Pipeline.EtlStats(0, 0, 0, 0, 0, 0)
+  /** Both ETL forms over an input none of whose rows reach the fact. */
+  private def assertNothingLoaded(input: DataFrame, expected: Pipeline.EtlStats): Unit = {
     val batch = Pipeline.run(
-      spark, empty, assets, subscribers, postal2city, cities, countries)
-    assert(batch.stats == zero)
+      spark, input, assets, subscribers, postal2city, cities, countries)
+    assert(batch.stats == expected)
     assert(batch.fact.collect().isEmpty && batch.dimDate.collect().isEmpty)
     Validate.all(batch.fact, expectedValidRows = 0)
 
     val obs = Pipeline.runSinglePass(
-      spark, empty, assets, subscribers, postal2city, cities, countries)
+      spark, input, assets, subscribers, postal2city, cities, countries)
     assert(obs.fact.collect().isEmpty) // the action the observation rides on
     val (stats, dimDate) = obs.finish()
-    assert(stats == zero)
+    assert(stats == expected)
     assert(dimDate.collect().isEmpty)
     assert(dimDate.columns.toSeq == result.dimDate.columns.toSeq)
     Validate.all(obs.fact, expectedValidRows = 0)
+  }
+
+  test("empty input: both ETL forms give zero stats, an empty fact and dim_date") {
+    assertNothingLoaded(df(Schemas.streamingTxns), Pipeline.EtlStats(0, 0, 0, 0, 0, 0))
+  }
+
+  test("all rows dropped: both ETL forms count them, with an empty fact and dim_date") {
+    // every row also lacks a usable date, so the date bounds are null while
+    // the counters are not
+    val dropped = df(Schemas.streamingTxns,
+      Row(1L, "u5", "DEL-001", null, 10, 1), //         unmapped user, no date
+      Row(2L, "u1", "OXXX-1", "not-a-date", 20, 1), //  uninferable sport, bad date
+      Row(3L, "u2", "SKJ-001", "2022-13-45", 30, 0)) // unparseable date
+    assertNothingLoaded(dropped, Pipeline.EtlStats(read = 3, missingCountry = 1,
+      recoveredByInference = 0, missingSport = 1, missingDate = 3, valid = 0))
   }
 
   test("union of two sources aggregates identically to a single source (U1)") {
