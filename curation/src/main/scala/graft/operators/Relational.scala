@@ -653,9 +653,9 @@ object Relational {
     * NDV / min / max in one aggregate pass — the stats a cost-based
     * optimizer consumes. The ship date is profiled at DATE grain so the
     * stringified bounds are engine-portable. See
-    * [[graft.etl.CatalogOps.analyzeColumns]]. */
+    * [[graft.etl.ColumnProfile.analyzeColumns]]. */
   def q35AnalyzeStats(spark: SparkSession, dir: String): DataFrame =
-    graft.etl.CatalogOps.analyzeColumns(
+    graft.etl.ColumnProfile.analyzeColumns(
       Tables(spark, dir, "lineitem")
         .withColumn("l_shipdate", to_date(col("l_shipdate"))),
       Seq("l_orderkey", "l_quantity", "l_returnflag", "l_shipdate"))
@@ -819,12 +819,12 @@ object Relational {
   }
 
   /** Hopping (sliding) windows over events — the batch form of the
-    * streaming trending query ([[graft.streaming.StreamingIngest
+    * streaming trending query ([[graft.streaming.EventWindows
     * .hoppingEventCounts]]); `window(length, hop)` assigns each event to
     * its length/hop covering windows in one projection, so the plan is one
     * expand + one grain shuffle regardless of overlap factor. */
   def q26HoppingWindow(spark: SparkSession, dir: String): DataFrame =
-    graft.streaming.StreamingIngest
+    graft.streaming.EventWindows
       .hoppingEventCounts(Tables(spark, dir, "events"))
       .orderBy("win_start", "event_type")
 

@@ -343,7 +343,7 @@ object CorpusIngest {
       logStats: Boolean = false): StreamingQuery = {
     val merger = new Merger(spark, corpusDir, threshold, qualityMin, logStats)
     spark.readStream
-      .schema(graft.etl.Schemas.documents)
+      .schema(graft.etl.CorpusSchemas.documents)
       .parquet(dropDir)
       .writeStream
       .option("checkpointLocation", checkpointDir)

@@ -187,7 +187,7 @@ object PqIngest {
       logStats: Boolean = false, logDrift: Boolean = false): StreamingQuery = {
     val merger = new Merger(spark, indexDir, m, k, logStats, logDrift)
     spark.readStream
-      .schema(graft.etl.Schemas.embeddings)
+      .schema(graft.etl.CorpusSchemas.embeddings)
       .parquet(dropDir)
       .writeStream
       .option("checkpointLocation", checkpointDir)

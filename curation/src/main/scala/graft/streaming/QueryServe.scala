@@ -9,7 +9,7 @@ import org.apache.spark.sql.types._
 /** Streamed hybrid SERVING (round 11) — the read-side twin of the
   * streamed ingests: retrieval requests arrive as parquet files in a
   * drop directory (`(query_id, query_text, embedding)` —
-  * [[graft.etl.Schemas.queryRequests]]), each micro-batch is answered
+  * [[graft.etl.CorpusSchemas.queryRequests]]), each micro-batch is answered
   * off the PERSISTED stores alone
   * ([[graft.text.Retrieval.hybridTopKFromStoresExternal]]: saved IVF-PQ
   * pair + stored BM25 frames + RRF), and the fused shortlists append to
@@ -206,7 +206,7 @@ object QueryServe {
     val server = new Server(spark, corpusDir, ivfDir, pqDir, resultsDir,
       k, nprobe, rerank, kRrf, lists)
     val reader = spark.readStream
-      .schema(graft.etl.Schemas.queryRequests)
+      .schema(graft.etl.CorpusSchemas.queryRequests)
     maxFilesPerTrigger.foreach(n =>
       reader.option("maxFilesPerTrigger", n.toString))
     reader.parquet(dropDir)

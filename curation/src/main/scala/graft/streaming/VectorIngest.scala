@@ -240,7 +240,7 @@ object VectorIngest {
       logStats: Boolean = false, logDrift: Boolean = false): StreamingQuery = {
     val merger = new Merger(spark, indexDir, nlist, logStats, logDrift)
     spark.readStream
-      .schema(graft.etl.Schemas.embeddings)
+      .schema(graft.etl.CorpusSchemas.embeddings)
       .parquet(dropDir)
       .writeStream
       .option("checkpointLocation", checkpointDir)

@@ -5,7 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.Row
 
 import graft.SparkTestBase
-import graft.etl.{CatalogOps, Pipeline, Schemas, StarStore}
+import graft.etl.{CatalogOps, ColumnProfile, Pipeline, Schemas, StarStore}
 
 /** CSV source round-trip (S3-S5) and catalog registration/verification
   * (S10/S11): the CSV path must survive the text `completed` column and
@@ -45,6 +45,27 @@ class SourcesSpec extends SparkTestBase {
       .map(_.getAs[Long]("transaction_id")).toSeq == Seq(100L, 101L))
     val bad = quarantined.collect().map(_.getString(0))
     assert(bad.length == 1 && bad.head.contains("not_a_number"))
+  }
+
+  test("quarantine csv leaves no cache entry for its read") {
+    val dir = Files.createTempDirectory("graft_qcsv_cache").toString
+    val csv = s"$dir/export.csv"
+    Files.writeString(java.nio.file.Paths.get(csv),
+      """transaction_id,subscriber_id,user_id,asset_id,streaming_date,streaming_start_time,minutes_streamed,device_type,quality_streamed,completed
+        |100,s1,u1,DEL-001,2022-01-01,10:00,30,mobile,HD,1
+        |BROKEN,s9,u9,DEL-009,2022-01-03,09:00,not_a_number,tv,HD,1
+        |""".stripMargin)
+    val (clean, quarantined) = Sources.csvWithQuarantine(spark, csv)
+    assert(clean.count() == 1 && quarantined.count() == 1)
+    // the cache manager matches entries by plan: an identical read finds
+    // any entry the call registered
+    val sameRead = spark.read
+      .option("header", "true")
+      .option("mode", "PERMISSIVE")
+      .option("columnNameOfCorruptRecord", "_corrupt_record")
+      .schema(Schemas.csvExport.add("_corrupt_record", "string"))
+      .csv(csv)
+    assert(sameRead.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
   }
 
   test("star catalog registers and schema-verifies a written store") {
@@ -145,8 +166,8 @@ class SourcesSpec extends SparkTestBase {
     val rsd = 0.05
     def byCol(dfRows: Array[Row]) =
       dfRows.map(r => r.getString(0) -> r).toMap
-    val exact = byCol(CatalogOps.analyzeColumns(li, cols).collect())
-    val approx = byCol(CatalogOps.analyzeColumnsApprox(li, cols, rsd).collect())
+    val exact = byCol(ColumnProfile.analyzeColumns(li, cols).collect())
+    val approx = byCol(ColumnProfile.analyzeColumnsApprox(li, cols, rsd).collect())
     cols.foreach { c =>
       val (e, a) = (exact(c), approx(c))
       // rows/nulls/min/max are exact in both forms; only NDV is estimated
@@ -157,7 +178,7 @@ class SourcesSpec extends SparkTestBase {
         s"$c: approx NDV $an vs exact $en")
     }
     // the approx plan must not contain the exact path's Expand
-    val plan = CatalogOps.analyzeColumnsApprox(li, cols, rsd)
+    val plan = ColumnProfile.analyzeColumnsApprox(li, cols, rsd)
       .queryExecution.executedPlan.toString
     assert(!plan.contains("Expand"))
   }
@@ -165,8 +186,8 @@ class SourcesSpec extends SparkTestBase {
   test("JSONL corpus round-trips losslessly; a torn line quarantines, not aborts") {
     val docs = spark.read.parquet(sf("sf0.001") + "/documents.parquet")
     val dir = java.nio.file.Files.createTempDirectory("jsonl").toString
-    Sources.writeJsonlCorpus(docs, s"$dir/corpus", shards = 3)
-    val (clean, quarantined) = Sources.jsonlCorpus(spark, s"$dir/corpus")
+    CorpusSources.writeJsonlCorpus(docs, s"$dir/corpus", shards = 3)
+    val (clean, quarantined) = CorpusSources.jsonlCorpus(spark, s"$dir/corpus")
     assert(quarantined.count() == 0L)
     // lossless round trip, column for column
     assert(clean.count() == docs.count())
@@ -184,7 +205,7 @@ class SourcesSpec extends SparkTestBase {
       java.nio.file.Paths.get(s"$dir/corpus/torn.json"),
       """{"doc_id": 999999, "text": "ok doc", "lang": "en", "source": "s", "n_chars": 6}""" +
         "\n" + """{"doc_id": 999998, "text": "TRUNCATED""" + "\n")
-    val (c2, q2) = Sources.jsonlCorpus(spark, s"$dir/corpus")
+    val (c2, q2) = CorpusSources.jsonlCorpus(spark, s"$dir/corpus")
     assert(c2.count() == docs.count() + 1)
     assert(q2.count() == 1L)
     assert(q2.head.getString(0).contains("TRUNCATED"))

@@ -145,7 +145,7 @@ class StreamingSpec extends SparkTestBase {
         .add("event_type", "string").add("user_id", "long")
         .add("value", "double"))
       .parquet(dir)
-    val q = StreamingIngest.dailyEventRollup(stream, watermark = Some("1 hour"))
+    val q = EventWindows.dailyEventRollup(stream, watermark = Some("1 hour"))
       .writeStream.outputMode("append")
       .option("checkpointLocation", ckpt)
       .format("memory").queryName("daily_append").start()
@@ -185,7 +185,7 @@ class StreamingSpec extends SparkTestBase {
     val stream = spark.readStream
       .schema(new StructType().add("event_id", "long").add("ts", "timestamp"))
       .parquet(dir)
-    val q = StreamingIngest.dedupedStream(stream, "2 hours", "event_id")
+    val q = EventWindows.dedupedStream(stream, "2 hours", "event_id")
       .writeStream.outputMode("append")
       .option("checkpointLocation", ckpt)
       .format("memory").queryName("dedup_out").start()
@@ -214,7 +214,7 @@ class StreamingSpec extends SparkTestBase {
     Files.copy(java.nio.file.Paths.get(s"$eventsDir/events.parquet"),
       java.nio.file.Paths.get(s"$streamDir/events.parquet"))
     val raw = graft.Tables.streamEvents(spark, streamDir)
-    val agg = StreamingIngest.dailyEventRollup(raw)
+    val agg = EventWindows.dailyEventRollup(raw)
     val q = agg.writeStream.outputMode("complete")
       .format("memory").queryName("daily_out").start()
     q.processAllAvailable()
@@ -235,7 +235,7 @@ class StreamingSpec extends SparkTestBase {
     Files.copy(java.nio.file.Paths.get(s"$eventsDir/events.parquet"),
       java.nio.file.Paths.get(s"$streamDir/events.parquet"))
     val raw = graft.Tables.streamEvents(spark, streamDir)
-    val agg = StreamingIngest.hoppingEventCounts(raw)
+    val agg = EventWindows.hoppingEventCounts(raw)
     val q = agg.writeStream.outputMode("complete")
       .format("memory").queryName("hopping_out").start()
     q.processAllAvailable()

@@ -15,14 +15,9 @@ object DimBuilder {
     * bounds (empty or all-unparseable input) give an empty spine. */
   def dimDateFromBounds(spark: SparkSession, min: java.sql.Date,
       max: java.sql.Date): DataFrame = {
-    val bounds = spark.range(1)
-      .select(lit(min).cast(DateType).as("d1"), lit(max).cast(DateType).as("d2"))
-    fromBoundsDf(bounds)
-  }
-
-  private def fromBoundsDf(bounds: DataFrame): DataFrame = {
-    val spine = bounds.select(
-      explode(sequence(col("d1"), col("d2"), expr("interval 1 day"))).as("full_date"))
+    val spine = spark.range(1).select(explode(sequence(
+      lit(min).cast(DateType), lit(max).cast(DateType), expr("interval 1 day")))
+      .as("full_date"))
     DateParts.withDateParts(spine, col("full_date"))
       .select("date_id", "full_date", "year", "quarter", "month", "week",
         "day_of_month", "day_of_week")

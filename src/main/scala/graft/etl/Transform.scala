@@ -75,9 +75,8 @@ object Transform {
     * aggregates — no extra anti-join scans of the fact source. The source
     * date bounds ride along in the same pass so the dim_date spine needs no
     * scan of its own (the reference re-scanned both sources for min/max,
-    * loadAnalyticsDB R:189-197). */
-  /** THE accounting aggregate list — shared by the standalone pass
-    * ([[accounting]]) and the observed single-pass form
+    * loadAnalyticsDB R:189-197). THE accounting aggregate list — shared by
+    * the standalone pass ([[accounting]]) and the observed single-pass form
     * (`Pipeline.runSinglePass`), so the two can never drift. */
   val accountingAggs: Seq[Column] = Seq(
     count(lit(1)).as("read"),

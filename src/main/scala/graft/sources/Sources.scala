@@ -38,7 +38,11 @@ object Sources {
     * reference's own accounting guarantees (SURVEY §5.1 counted drops).
     *
     * Returns (clean rows in the declared schema, quarantined raw lines).
-    * The input is persisted for the two consumers; caller unpersists. */
+    * Both derive from one local checkpoint of the input: the file is
+    * scanned once, here, and Spark accepts the quarantine query (it
+    * refuses a query over the raw read that selects only the corrupt-record
+    * column). The checkpoint adds no entry to the session's cache; its
+    * blocks are freed once both frames are garbage. */
   def csvWithQuarantine(spark: SparkSession, path: String): (DataFrame, DataFrame) = {
     import org.apache.spark.sql.functions.col
     import org.apache.spark.sql.types.{StringType, StructField}
@@ -50,49 +54,12 @@ object Sources {
       .option("columnNameOfCorruptRecord", "_corrupt_record")
       .schema(withCorrupt)
       .csv(path)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .localCheckpoint()
     val clean = raw.filter(col("_corrupt_record").isNull).drop("_corrupt_record")
     val quarantined = raw.filter(col("_corrupt_record").isNotNull)
       .select(col("_corrupt_record").as("raw_line"))
     (clean, quarantined)
   }
-
-  /** JSONL (newline-delimited JSON) corpus read — the interchange format
-    * LLM training corpora actually ship in (one document object per line).
-    * Schema is DECLARED, never inferred: inference costs a full extra pass
-    * over 100 TB and silently widens types on dirty data. Same quarantine
-    * discipline as the CSV path: PERMISSIVE + corrupt-record column, so a
-    * torn line neither aborts the scan (FAILFAST) nor vanishes. Returns
-    * (clean docs, quarantined raw lines); the shared input is persisted
-    * through [[Caches.persistReplacing]] keyed on the path, so re-reading
-    * the same corpus replaces the one cached copy instead of accumulating
-    * a MEMORY_AND_DISK entry per call (and `Caches.releaseAll()` covers
-    * it at workload boundaries — no caller-side unpersist contract). */
-  def jsonlCorpus(spark: SparkSession, path: String): (DataFrame, DataFrame) = {
-    import org.apache.spark.sql.functions.col
-    import org.apache.spark.sql.types.{StringType, StructField, StructType}
-    val withCorrupt = StructType(
-      Schemas.documents.fields :+ StructField("_corrupt_record", StringType))
-    val raw = graft.Caches.persistReplacing(s"jsonlCorpus:$path",
-      spark.read
-        .option("mode", "PERMISSIVE")
-        .option("columnNameOfCorruptRecord", "_corrupt_record")
-        .schema(withCorrupt)
-        .json(path))
-    val clean = raw.filter(col("_corrupt_record").isNull).drop("_corrupt_record")
-    val quarantined = raw.filter(col("_corrupt_record").isNotNull)
-      .select(col("_corrupt_record").as("raw_line"))
-    (clean, quarantined)
-  }
-
-  /** JSONL corpus write (shard-per-partition, one JSON object per line) —
-    * the export half of the interchange contract. Plain `df.write.json`
-    * plus an explicit partition count so shard sizes are chosen, not
-    * inherited from whatever the upstream shuffle left behind. */
-  def writeJsonlCorpus(df: DataFrame, path: String, shards: Int): Unit =
-    df.repartition(shards).write
-      .mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .json(path)
 
   /** JDBC operational store (S1/S2's SQLite/MySQL shape). Partitioned read:
     * numPartitions parallel range scans on `partitionColumn` replace the

@@ -3,8 +3,9 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.storage.StorageLevel
 
-import graft.etl.{Schemas, StarStore, Transform}
+import graft.etl.{Schemas, Transform}
 
 /** Incremental/streaming ingestion — the generalization of the reference's
   * hand-rolled 50 K-row micro-batch loop with `ON DUPLICATE KEY UPDATE`
@@ -44,20 +45,21 @@ object StreamingIngest {
 
     private val stagingDir = s"$storeDir/staging_valid_txns"
 
-    // "Dimension maps are resolved once at start" (the reference's
-    // lookup-map discipline) — but a lazy frame re-EXECUTES its
-    // derivation (two joins + a groupBy over the subscriber base)
-    // inside every micro-batch's broadcast build. Pinning both maps in
-    // the shared registry makes trigger 1 materialize them once and
-    // every later trigger reuse the blocks (optimization round 15,
-    // guide §2.4/§5 — per-trigger fixed cost, the dominant term when
-    // drains are small); replace-on-change keying means a merger built
-    // over refreshed dimensions registers fresh frames, and
-    // Caches.releaseAll reclaims them at workload boundaries.
-    private val ucMap =
-      graft.Caches.persistReplacing("stream_user_country", userCountryMap)
-    private val asMap =
-      graft.Caches.persistReplacing("stream_asset_sport", assetSportMap)
+    /** "Dimension maps are resolved once at start" (the reference's
+      * lookup-map discipline) — but a lazy frame re-EXECUTES its
+      * derivation (two joins + a groupBy over the subscriber base) inside
+      * every micro-batch's broadcast build. So the merger persists both
+      * maps itself: trigger 1 materializes them once and every later
+      * trigger reads the cached blocks. Spark's cache manager keys entries
+      * by plan: a second merger over identical dimensions reuses the same
+      * entries, and one built over changed dimension rows (a different
+      * plan) gets entries of its own, never the old map. A re-read of the
+      * same dimension files is the same plan, so clear the cache after
+      * rewriting them in place. Nothing releases a replaced merger's
+      * entries: they stay cached until the session's cache is cleared
+      * (`spark.catalog.clearCache()`) or the map is unpersisted. */
+    private val ucMap = userCountryMap.persist(StorageLevel.MEMORY_AND_DISK)
+    private val asMap = assetSportMap.persist(StorageLevel.MEMORY_AND_DISK)
 
     def mergeBatch(batch: DataFrame, batchId: Long): Unit = {
       val enriched = Transform.enrich(batch, ucMap, asMap)
@@ -110,54 +112,5 @@ object StreamingIngest {
       .trigger(trigger)
       .foreachBatch((batch: DataFrame, id: Long) => merger.mergeBatch(batch, id))
       .start()
-  }
-
-  /** Streaming exact dedup on `keys` with BOUNDED state: duplicates
-    * arriving within `delay` of the watermark are dropped, and key state
-    * older than the watermark is evicted — the ingest-side guard a training
-    * pipeline puts in front of the corpus store (re-delivered files,
-    * at-least-once upstream queues). Unlike plain `dropDuplicates` on a
-    * stream (state grows forever), the watermark variant holds each key
-    * only for the re-delivery horizon. Rows are emitted on first arrival —
-    * no watermark-wait latency. */
-  def dedupedStream(events: DataFrame, delay: String, keys: String*): DataFrame =
-    events.withWatermark("ts", delay)
-      .dropDuplicatesWithinWatermark(keys.head, keys.tail: _*)
-
-  /** Q16's streaming form: tumbling daily event-time window over the events
-    * stream. On a closed input this must produce exactly the batch rows
-    * (asserted in StreamingSpec). `watermark` bounds state for continuous
-    * runs; the default mirrors the reference's unbounded lateness. */
-  def dailyEventRollup(events: DataFrame, watermark: Option[String] = None): DataFrame = {
-    val withWm = watermark.fold(events)(w => events.withWatermark("ts", w))
-    withWm
-      .groupBy(window(col("ts"), "1 day"), col("event_type"))
-      .agg(
-        count(lit(1)).as("events"),
-        // exact countDistinct is not supported inside a streaming agg;
-        // HLL++ is the streaming-native answer (SURVEY §2.11 upgrade path)
-        approx_count_distinct(col("user_id")).as("approx_uniq_users"),
-        // decimal sum: result independent of micro-batch arrival order
-        round(sum(col("value").cast(org.apache.spark.sql.types.DecimalType(18, 4))), 2)
-          .cast("double").as("total_value"))
-      .select(col("window.start").cast("date").as("day"), col("event_type"),
-        col("events"), col("approx_uniq_users"), col("total_value"))
-  }
-
-  /** Trending detection: hopping (sliding) event-time windows — each event
-    * lands in length/hop overlapping windows, so a burst is visible the
-    * moment its FIRST hop closes instead of a full tumbling period later.
-    * Same shape batch or streaming; with a watermark, state is bounded to
-    * (lateness + length)/hop open windows per key. */
-  def hoppingEventCounts(events: DataFrame, length: String = "6 hours",
-      hop: String = "1 hour", watermark: Option[String] = None): DataFrame = {
-    val withWm = watermark.fold(events)(w => events.withWatermark("ts", w))
-    withWm
-      .groupBy(window(col("ts"), length, hop), col("event_type"))
-      .agg(count(lit(1)).as("events"),
-        round(sum(col("value").cast(org.apache.spark.sql.types.DecimalType(18, 4))), 2)
-          .cast("double").as("total_value"))
-      .select(col("window.start").as("win_start"), col("window.end").as("win_end"),
-        col("event_type"), col("events"), col("total_value"))
   }
 }

@@ -1,0 +1,64 @@
+package graft.streaming
+
+import java.nio.file.Files
+
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.storage.StorageLevel
+
+import graft.SparkTestBase
+import graft.etl.{FactSink, Transform}
+
+/** The stream merger owns its two lookup maps: it caches them itself, and
+  * a merger over changed dimensions never reads an earlier merger's map. */
+class FactMergerSpec extends SparkTestBase {
+  import spark.implicits._
+
+  private def userCountry(postalOfU1: String): DataFrame =
+    Transform.userCountry(
+      Seq(("u1", postalOfU1)).toDF("user_id", "postal_code"),
+      Seq(("P1", 10), ("P2", 20)).toDF("postal_code", "city_id"),
+      Seq((10, 1), (20, 2)).toDF("city_id", "country_id"))
+
+  private def assetSport: DataFrame =
+    Transform.assetSport(Seq(("DEL-001", "Ice Hockey")).toDF("asset_id", "sport"))
+
+  private def txn(id: Long, date: String): DataFrame =
+    Seq((id, "u1", "DEL-001", date, 30, 1))
+      .toDF("transaction_id", "user_id", "asset_id", "streaming_date",
+        "minutes_streamed", "completed")
+
+  /** A sink that keeps each merged slice's (date_id, country_id) pairs. */
+  private class RecordingSink extends FactSink {
+    val merged = scala.collection.mutable.Buffer[Seq[(Int, Int)]]()
+    def writeFull(fact: DataFrame): Unit = fail("merges never rewrite in full")
+    def mergePartitions(slice: DataFrame): Unit =
+      merged += slice.collect().toSeq.map((r: Row) =>
+        (r.getAs[Int]("date_id"), r.getAs[Int]("country_id")))
+    def read(s: SparkSession): DataFrame = fail("merges never read")
+  }
+
+  private def merger(ucMap: DataFrame, sink: FactSink) =
+    new StreamingIngest.FactMerger(spark,
+      Files.createTempDirectory("graft_merger").toString,
+      ucMap, assetSport, sink)
+
+  test("after the first merge both lookup maps are in the cache manager") {
+    val sink = new RecordingSink
+    merger(userCountry("P1"), sink).mergeBatch(txn(1L, "2022-01-01"), 0L)
+    assert(sink.merged == Seq(Seq((20220101, 1))))
+    // the cache manager matches by plan: freshly built identical maps
+    // find the entries the merger registered
+    assert(userCountry("P1").storageLevel == StorageLevel.MEMORY_AND_DISK)
+    assert(assetSport.storageLevel == StorageLevel.MEMORY_AND_DISK)
+  }
+
+  test("a merger over a changed subscriber postal code routes to the new country") {
+    val before = new RecordingSink
+    merger(userCountry("P1"), before).mergeBatch(txn(1L, "2022-01-01"), 0L)
+    assert(before.merged == Seq(Seq((20220101, 1))))
+    // u1 moves from P1 (country 1) to P2 (country 2)
+    val after = new RecordingSink
+    merger(userCountry("P2"), after).mergeBatch(txn(2L, "2022-01-02"), 1L)
+    assert(after.merged == Seq(Seq((20220102, 2))))
+  }
+}
