@@ -55,7 +55,7 @@ class LayoutSpec extends SparkTestBase {
       (20210101 + (i * 37) % 300, 2021, i.toLong)
     }.toDF("date_id", "year", "total_minutes_streamed").repartition(4)
     StarStore.writeFact(fact, dir)
-    val files = new java.io.File(s"$dir/fact_streaming_summary/year=2021")
+    val files = new java.io.File(s"$dir/fact_streaming_summary/data/year=2021")
       .listFiles().filter(_.getName.endsWith(".parquet"))
     assert(files.nonEmpty)
     files.foreach { f =>

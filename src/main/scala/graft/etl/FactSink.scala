@@ -3,10 +3,10 @@ package graft.etl
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** The fact-store merge contract (SURVEY §7): everything the ETL and the
-  * streaming ingest need from fact storage, isolated so a transactional
-  * table format (Delta/Iceberg `MERGE`) can slot in without touching the
-  * pipeline — the parquet implementation below carries the reference's
-  * MySQL range-partitioning semantics in the meantime.
+  * streaming ingest need from fact storage. The store is
+  * [[VersionedFactSink]], whose atomic, versioned commits carry the
+  * reference's transactional upserts into a range-partitioned table; the
+  * trait is the seam tests use to observe what the pipeline merges.
   */
 trait FactSink extends Serializable {
   /** Truncate-and-reload (S9): replace the whole fact. */
@@ -18,13 +18,7 @@ trait FactSink extends Serializable {
   def mergePartitions(factSlice: DataFrame): Unit
 
   def read(spark: SparkSession): DataFrame
-}
 
-/** Year-partitioned parquet with dynamic partition overwrite — the
-  * non-transactional stand-in for a `MERGE`-capable table format. */
-final class ParquetFactSink(dir: String) extends FactSink {
-  def writeFull(fact: DataFrame): Unit = StarStore.writeFact(fact, dir)
-  def mergePartitions(factSlice: DataFrame): Unit =
-    StarStore.mergeFactPartitions(factSlice, dir)
-  def read(spark: SparkSession): DataFrame = StarStore.readFact(spark, dir)
+  /** Called when the writer (re)starts: clear what a crashed commit left. */
+  def recover(): Unit = ()
 }

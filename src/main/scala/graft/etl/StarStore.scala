@@ -5,36 +5,22 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 /** Star-schema storage: partitioned parquet replacing the reference's MySQL
   * range partitioning (`createStarSchema.PractII.VarmaA.R:160-168`).
   *
-  * The fact is partitioned by `year` — the analog of the reference's yearly
+  * The fact lives in a [[VersionedFactSink]] under `fact_streaming_summary`:
+  * Hive `year=` directories — the analog of the reference's yearly
   * `PARTITION BY RANGE (date_id)` — so Catalyst prunes partitions for the
-  * year-filtered analytics family (P6) and incremental merges rewrite only
-  * the affected years. The reference's 8 secondary indexes have no parquet
-  * equivalent; partition pruning + row-group min/max statistics carry their
-  * query-speed role (SURVEY §4).
+  * year-filtered analytics family (P6), files sorted by `date_id` within
+  * each year, and atomic versioned commits in place of the reference's
+  * transactional upserts. The reference's 8 secondary indexes have no
+  * parquet equivalent; partition pruning + row-group min/max statistics
+  * carry their query-speed role (SURVEY §4). Dims are read with their
+  * declared schemas, so no read runs a schema-inference job.
   */
 object StarStore {
-  /** Within each year partition, rows are sorted by `date_id` before the
-    * write, so every file's row groups carry tight date_id min/max windows
-    * — sub-year date-range scans (weekly/monthly analytics) prune at the
-    * row-group level on top of P6's directory-level year pruning. The
-    * reference leaned on a (date_id) secondary index for the same access
-    * path; a sorted layout is the parquet-native equivalent and costs only
-    * a per-partition sort at write time. */
-  def writeFact(fact: DataFrame, dir: String): Unit =
-    fact.sortWithinPartitions("year", "date_id")
-      .write.mode(SaveMode.Overwrite).partitionBy("year")
-      .parquet(s"$dir/fact_streaming_summary")
+  def factSink(dir: String): VersionedFactSink =
+    new VersionedFactSink(s"$dir/fact_streaming_summary")
 
-  /** Overwrite only the year partitions present in `factSlice` — the
-    * additive-upsert replacement (S7) used by the incremental/streaming
-    * path. Requires dynamic partition overwrite so untouched years keep
-    * their data. Same sorted-within-year layout as [[writeFact]]. */
-  def mergeFactPartitions(factSlice: DataFrame, dir: String): Unit =
-    factSlice.sortWithinPartitions("year", "date_id")
-      .write.mode(SaveMode.Overwrite)
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("year")
-      .parquet(s"$dir/fact_streaming_summary")
+  /** Truncate-and-reload (S9): commit `fact` as the store's new version. */
+  def writeFact(fact: DataFrame, dir: String): Unit = factSink(dir).writeFull(fact)
 
   def writeDims(dimDate: DataFrame, dimCountry: DataFrame,
       dimSport: DataFrame, dir: String): Unit = {
@@ -43,12 +29,11 @@ object StarStore {
     dimSport.write.mode(SaveMode.Overwrite).parquet(s"$dir/dim_sport")
   }
 
-  def readFact(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"$dir/fact_streaming_summary")
+  def readFact(spark: SparkSession, dir: String): DataFrame = factSink(dir).read(spark)
   def readDimDate(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"$dir/dim_date")
+    spark.read.schema(Schemas.dimDate).parquet(s"$dir/dim_date")
   def readDimCountry(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"$dir/dim_country")
+    spark.read.schema(Schemas.dimCountry).parquet(s"$dir/dim_country")
   def readDimSport(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"$dir/dim_sport")
+    spark.read.schema(Schemas.dimSport).parquet(s"$dir/dim_sport")
 }

@@ -1,125 +1,111 @@
 package graft.etl
 
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{Files, Path, Paths, StandardCopyOption, StandardOpenOption}
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.types.StructType
 
-/** Transactional [[FactSink]] on plain parquet: the commit protocol a
-  * table format provides, hand-built from two primitives every filesystem
-  * has — immutable data directories and an atomic rename.
+/** The fact store: the one module that writes the year-partitioned fact to
+  * disk and reads it back. A transactional commit protocol on plain
+  * parquet, hand-built from two primitives every filesystem has —
+  * immutable files and an atomic rename.
   *
   * Layout under `dir`:
   * {{{
-  *   data/<uuid>/            one immutable parquet dir per written slice
-  *   _versions/v<N>.json     manifest: year -> data dir for that version
-  *   _latest                 pointer file, swapped by atomic rename
+  *   data/year=<Y>/<file>.parquet   immutable, uniquely named data files
+  *   _versions/v<N>.json            manifest: schema + the files of version N
+  *   _latest                        pointer file, swapped by atomic rename
   * }}}
   *
-  * A writer prepares data and a manifest FIRST, and publishes with one
+  * A commit writes its files and its manifest FIRST and publishes with one
   * `rename(_latest.tmp, _latest)` LAST: readers see the old complete
-  * version or the new complete version, never a half-written mix — a
-  * crash before the swap leaves an orphaned data dir that [[vacuum]]
-  * reclaims, not a corrupt table. Merges are copy-on-write at year
-  * granularity (untouched years keep their existing data dirs), replaying
-  * the same slice converges to the same content (idempotent), and every
-  * published version remains readable ([[readVersion]] — time travel)
-  * until vacuumed.
+  * version or the new complete version, never a half-written mix. A reader
+  * lists no directory: it reads exactly the manifest's files under the
+  * `data/` base path, so Spark still prunes the Hive `year=` directories.
+  * Merges are copy-on-write at year granularity (untouched years keep their
+  * files), and replaying the same slice converges to the same content.
   *
-  * CONCURRENT writers (r7/r8 verdict #7) are serialized by an atomic
-  * version CLAIM: each commit create-if-absent's its manifest file
-  * (`CREATE_NEW` — atomic on any POSIX filesystem) BEFORE writing data,
-  * so two writers racing for version N cannot both publish — the loser
-  * fails loudly at the claim, before any data lands, with nothing to
-  * vacuum, and a writer whose base version was published-over mid-commit
-  * fails the same way instead of silently dropping the interleaved
-  * version's years. A claimed-but-unpublished manifest (a writer in
-  * flight, or one that crashed mid-commit) blocks the next claim of that
-  * number; the refusal message names the file so a crashed claim can be
-  * repaired by deleting it. This is optimistic concurrency on the version
-  * chain — the same discipline Delta's transaction-log commit uses —
-  * without needing an external lock service.
+  * After every commit [[vacuum]] keeps the current version and the one
+  * before it, so a frame resolved before a commit still reads after it
+  * ([[readVersion]] — time travel over the retained versions).
+  *
+  * Single writer per store (as any log-structured format without a lock
+  * service). A racing writer is still caught: each commit claims its
+  * manifest file with `CREATE_NEW` (atomic O_CREAT|O_EXCL) BEFORE writing
+  * data, so of two writers racing for version N exactly one proceeds and
+  * the other fails loudly with nothing written. A commit that fails after
+  * its claim releases it; a claim left by a crashed process is released by
+  * [[recover]] when the writer restarts.
   */
 final class VersionedFactSink(rawDir: String) extends FactSink {
+  import VersionedFactSink.Retained
 
-  // vacuum decides liveness by comparing manifest paths against directory
-  // listings — a trailing slash / "./" prefix in the constructor arg would
-  // make the retained set match nothing and delete the CURRENT version, so
-  // pin one canonical spelling up front and use it everywhere
-  private val dir: String =
-    Paths.get(rawDir).toAbsolutePath.normalize().toString
-
-  private def versionsDir = Paths.get(dir, "_versions")
-  private def latestPtr = Paths.get(dir, "_latest")
+  // kept as a String so the sink stays serializable (nio paths are not)
+  private val root = Paths.get(rawDir).toAbsolutePath.normalize().toString
+  private def dir = Paths.get(root)
+  private def dataDir = dir.resolve("data")
+  private def versionsDir = dir.resolve("_versions")
+  private def latestPtr = dir.resolve("_latest")
+  private def manifestPath(v: Int) = versionsDir.resolve(f"v$v%05d.json")
 
   // ---------------------------------------------------------- manifest IO
-  // list a directory with the stream closed (Files.list leaks an fd
-  // per call otherwise — vacuum loops would exhaust the ulimit)
+  // list with the stream closed (Files.list/walk leak an fd per call)
   private def listDir(p: Path): Seq[Path] = {
     val s = Files.list(p)
     try s.iterator().asScala.toSeq finally s.close()
   }
 
-  // the commit's CAS point: atomically create version v's manifest file
-  // empty — succeeds for exactly ONE writer per version number (POSIX
-  // O_CREAT|O_EXCL), and fails loudly for a racer whose base version was
-  // concurrently claimed or published. Runs BEFORE the data write, so
-  // the loser spends nothing and strands nothing.
+  /** Every manifest file: published versions and unpublished claims. */
+  private def versions: Seq[Int] =
+    if (!Files.exists(versionsDir)) Nil
+    else listDir(versionsDir).map(_.getFileName.toString).collect {
+      case n if n.startsWith("v") && n.endsWith(".json") =>
+        n.stripPrefix("v").stripSuffix(".json").toInt
+    }
+
+  // the commit's CAS point: create version v's manifest file empty —
+  // succeeds for exactly ONE writer per version number
   private def claimVersion(v: Int): Unit = {
     Files.createDirectories(versionsDir)
-    val p = versionsDir.resolve(f"v$v%05d.json")
-    try Files.write(p, Array.emptyByteArray,
-      java.nio.file.StandardOpenOption.CREATE_NEW)
+    try Files.write(manifestPath(v), Array.emptyByteArray, StandardOpenOption.CREATE_NEW)
     catch {
       case _: java.nio.file.FileAlreadyExistsException =>
         throw new IllegalStateException(
-          s"version $v under $dir is already claimed ($p exists) — " +
+          s"version $v under $root is already claimed (${manifestPath(v)} exists) — " +
             "another writer committed or is mid-commit; re-read the table " +
-            "and retry the commit on the new current version (if the " +
-            "claimant crashed before publishing, delete that manifest " +
-            "file to release the claim)")
+            "and retry the commit on the new current version")
     }
   }
 
   // manifest format: "#schema<TAB>ddl" header (so an EMPTY version — a
-  // truncate to zero rows — stays readable), then one "year<TAB>path"
-  // line per year (stable order). Overwrites the zero-byte claim file;
-  // readers only resolve manifests reachable from the published _latest
-  // pointer, so in-progress content is invisible (and vacuum treats an
-  // empty claim as referencing no data dirs, which is exactly right).
-  private def writeManifest(v: Int, schemaDdl: String,
-      m: Map[Int, String]): Path = {
-    Files.createDirectories(versionsDir)
-    val body = (s"#schema\t$schemaDdl" +:
-      m.toSeq.sorted.map { case (y, p) => s"$y\t$p" }).mkString("\n")
-    Files.write(versionsDir.resolve(f"v$v%05d.json"),
-      body.getBytes(StandardCharsets.UTF_8))
-  }
+  // truncate to zero rows — stays readable), then one data file per line,
+  // relative to data/. Overwrites the zero-byte claim; readers resolve only
+  // manifests reachable from the published _latest pointer.
+  private def writeManifest(v: Int, schemaDdl: String, files: Seq[String]): Unit =
+    Files.write(manifestPath(v),
+      (s"#schema\t$schemaDdl" +: files.sorted).mkString("\n")
+        .getBytes(StandardCharsets.UTF_8))
 
-  private def readManifest(v: Int): (String, Map[Int, String]) = {
-    val p = versionsDir.resolve(f"v$v%05d.json")
-    require(Files.exists(p), s"version $v does not exist under $dir")
+  private def readManifest(v: Int): (String, Seq[String]) = {
+    val p = manifestPath(v)
+    require(Files.exists(p), s"version $v does not exist under $root")
     val lines = new String(Files.readAllBytes(p), StandardCharsets.UTF_8)
       .linesIterator.filter(_.nonEmpty).toSeq
     val schema = lines.headOption.filter(_.startsWith("#schema\t"))
       .map(_.stripPrefix("#schema\t")).getOrElse("")
-    val years = lines.filterNot(_.startsWith("#")).map { l =>
-      val Array(y, path) = l.split("\t", 2); y.toInt -> path
-    }.toMap
-    (schema, years)
+    (schema, lines.filterNot(_.startsWith("#")))
   }
 
   /** The committed version, or -1 for an empty table. */
   def currentVersion: Int =
     if (!Files.exists(latestPtr)) -1
-    else new String(Files.readAllBytes(latestPtr), StandardCharsets.UTF_8)
-      .trim.toInt
+    else new String(Files.readAllBytes(latestPtr), StandardCharsets.UTF_8).trim.toInt
 
   private def publish(v: Int): Unit = {
-    val tmp = Paths.get(dir, s"_latest.tmp$v")
+    val tmp = dir.resolve(s"_latest.tmp$v")
     Files.write(tmp, v.toString.getBytes(StandardCharsets.UTF_8))
     // the ONE atomic step — everything before this is invisible to readers
     Files.move(tmp, latestPtr, StandardCopyOption.ATOMIC_MOVE,
@@ -127,104 +113,108 @@ final class VersionedFactSink(rawDir: String) extends FactSink {
   }
 
   // ---------------------------------------------------------- data IO
-  /** Write `slice` as one immutable dir per year; `year` column kept IN
-    * the files (manifests map years to dirs, so partition directories are
-    * unnecessary and each year dir stands alone). */
-  private def writeSlice(slice: DataFrame): Map[Int, String] = {
-    val uuid = java.util.UUID.randomUUID().toString
-    val base = s"$dir/data/$uuid"
-    // the input plan would otherwise re-execute once per year plus once
-    // for the distinct — cache it for the duration of the write
-    val s = slice.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val years = s.select("year").distinct().collect()
-        .map(_.getInt(0)).sorted
-      years.map { y =>
-        val p = s"$base/y$y"
-        s.filter(col("year") === y)
-          .write.mode(SaveMode.ErrorIfExists).parquet(p)
-        y -> p
-      }.toMap
-    } finally { s.unpersist(); () }
+  /** One job writes `slice`, sorted by `date_id` within each year (tight
+    * row-group min/max windows for sub-year range scans), into a hidden
+    * per-commit directory; its files then move into the `year=` directories
+    * (the vacuum after the commit removes what is left of the directory).
+    * Returns the moved files relative to `data/`. */
+  private def writeSlice(slice: DataFrame): Seq[String] = {
+    val tmp = dataDir.resolve(s"_commit-${java.util.UUID.randomUUID()}")
+    slice.sortWithinPartitions("year", "date_id")
+      .write.partitionBy("year").parquet(tmp.toString)
+    listDir(tmp).filter(_.getFileName.toString.startsWith("year=")).flatMap { yearDir =>
+      val target = Files.createDirectories(dataDir.resolve(yearDir.getFileName))
+      listDir(yearDir).filter(_.getFileName.toString.endsWith(".parquet")).map { f =>
+        // Spark's file names carry the write job's UUID: unique per commit
+        Files.move(f, target.resolve(f.getFileName), StandardCopyOption.ATOMIC_MOVE)
+        dataDir.relativize(target.resolve(f.getFileName)).toString
+      }
+    }
   }
+
+  private def yearOf(file: String): String = file.takeWhile(_ != '/')
 
   // ---------------------------------------------------------- FactSink
-  def writeFull(fact: DataFrame): Unit = synchronized {
-    val v = currentVersion + 1
-    claimVersion(v)
-    writeManifest(v, fact.schema.toDDL, writeSlice(fact))
-    publish(v)
-  }
+  def writeFull(fact: DataFrame): Unit = commit(fact, keepUntouchedYears = false)
 
-  def mergePartitions(factSlice: DataFrame): Unit = synchronized {
+  def mergePartitions(factSlice: DataFrame): Unit =
+    commit(factSlice, keepUntouchedYears = true)
+
+  private def commit(slice: DataFrame, keepUntouchedYears: Boolean): Unit = synchronized {
     // read the base BEFORE claiming: the claim then guarantees no other
-    // writer published between this read and our publish (they would
-    // have needed the same claim), so the copy-on-write merge can never
-    // silently drop an interleaved version's years
+    // writer published between this read and our publish, so the
+    // copy-on-write merge never drops an interleaved version's years
     val base = currentVersion
-    val prev = if (base < 0) Map.empty[Int, String]
-      else readManifest(base)._2
+    val prev = if (keepUntouchedYears && base >= 0) readManifest(base)._2 else Nil
     val v = base + 1
     claimVersion(v)
-    writeManifest(v, factSlice.schema.toDDL,
-      prev ++ writeSlice(factSlice)) // copy-on-write by year
-    publish(v)
+    try {
+      val files = writeSlice(slice)
+      val touched = files.map(yearOf).toSet
+      writeManifest(v, slice.schema.toDDL, prev.filterNot(f => touched(yearOf(f))) ++ files)
+      publish(v)
+    } catch {
+      // release our own claim, or every later commit would fail on it;
+      // the commit's files are unreferenced and the next vacuum takes them
+      case e: Throwable => Files.deleteIfExists(manifestPath(v)); throw e
+    }
+    vacuum()
+  }
+
+  /** Writer (re)start: release versions claimed but never published — a
+    * commit that crashed between its claim and its publish — and reclaim
+    * their files. Safe only under the single-writer assumption. */
+  override def recover(): Unit = synchronized {
+    val cur = currentVersion
+    versions.filter(_ > cur).foreach(v => Files.delete(manifestPath(v)))
+    vacuum()
   }
 
   def read(spark: SparkSession): DataFrame = readVersion(spark, currentVersion)
 
-  /** Time travel: read any still-retained published version. */
+  /** Time travel: read any still-retained published version. The recorded
+    * schema is passed to the reader, so no job infers it from footers (the
+    * partition column `year` comes last). A version of more than 32 files
+    * (Spark's parallel-listing threshold) would add a listing job to every
+    * read; today's versions have ~5-12. */
   def readVersion(spark: SparkSession, v: Int): DataFrame = {
-    require(v >= 0, s"no committed version under $dir")
-    val (schemaDdl, years) = readManifest(v)
-    if (years.nonEmpty) spark.read.parquet(years.values.toSeq.sorted: _*)
-    else {
-      // an empty version (truncate to zero rows) is a valid table state,
-      // not a bricked one — reconstruct it from the recorded schema
-      require(schemaDdl.nonEmpty, s"version $v is empty and has no schema")
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType.fromDDL(schemaDdl))
-    }
+    require(v >= 0, s"no committed version under $root")
+    val (schemaDdl, files) = readManifest(v)
+    require(schemaDdl.nonEmpty, s"version $v has no schema")
+    val schema = StructType.fromDDL(schemaDdl)
+    if (files.isEmpty) // a truncate to zero rows is a valid, empty table
+      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
+    else spark.read.schema(schema).option("basePath", dataDir.toString)
+      .parquet(files.map(f => dataDir.resolve(f).toString): _*)
   }
 
-  /** Drop manifests older than `keepVersions` and delete every data dir no
-    * retained manifest references — including orphans from crashed
-    * (never-published) writes. Returns the deleted data dirs. */
-  def vacuum(keepVersions: Int = 1): Seq[String] = synchronized {
-    val cur = currentVersion
+  /** Drop manifests older than the last `keepVersions` and delete every data
+    * file no retained manifest lists: commit directories and the files of
+    * failed or crashed, never-published commits. Returns the deleted files. */
+  def vacuum(keepVersions: Int = Retained): Seq[String] = synchronized {
     require(keepVersions >= 1, "must retain at least the current version")
-    if (cur < 0) return Seq.empty
-    val keepFrom = math.max(0, cur - keepVersions + 1)
-    // walk the manifests that actually EXIST (earlier vacuums with a
-    // smaller horizon may already have deleted some inside the window)
-    val existing = listDir(versionsDir)
-      .map(_.getFileName.toString)
-      .collect { case n if n.startsWith("v") && n.endsWith(".json") =>
-        n.stripPrefix("v").stripSuffix(".json").toInt }
-    // normalize BOTH sides of the liveness comparison: manifests written by
-    // an instance constructed with a different spelling of the same dir
-    // (relative vs absolute) must still protect their data
-    val retained = existing.filter(_ >= keepFrom)
-      .flatMap(v => readManifest(v)._2.values)
-      .map(p => Paths.get(p).toAbsolutePath.normalize().toString).toSet
-    // manifests below the horizon go first, so a concurrent reader can't
-    // resolve a version whose data is about to disappear
-    existing.filter(_ < keepFrom)
-      .foreach(v => Files.delete(versionsDir.resolve(f"v$v%05d.json")))
-    val dataRoot = Paths.get(dir, "data")
-    if (!Files.exists(dataRoot)) return Seq.empty
-    val doomed = listDir(dataRoot)
-      .flatMap(listDir)
-      .filterNot(p => retained.contains(
-        p.toAbsolutePath.normalize().toString))
-    doomed.foreach(deleteRecursively)
-    // remove emptied uuid dirs
-    listDir(dataRoot).filter(u => listDir(u).isEmpty).foreach(Files.delete)
+    val (old, kept) = versions.partition(_ <= currentVersion - keepVersions)
+    // manifests below the horizon go first, so a reader can't resolve a
+    // version whose files are about to disappear
+    old.foreach(v => Files.delete(manifestPath(v)))
+    val live = kept.flatMap(v => readManifest(v)._2).toSet
+    val all = if (!Files.exists(dataDir)) Nil else {
+      val s = Files.walk(dataDir)
+      try s.iterator().asScala.toList finally s.close()
+    }
+    val doomed = all.filter(p =>
+      Files.isRegularFile(p) && !live(dataDir.relativize(p).toString))
+    doomed.foreach(Files.delete)
+    // children before parents: emptied year and commit directories go too
+    all.reverse.foreach(p =>
+      if (p != dataDir && Files.isDirectory(p) && listDir(p).isEmpty) Files.delete(p))
     doomed.map(_.toString)
   }
+}
 
-  private def deleteRecursively(p: Path): Unit = {
-    if (Files.isDirectory(p)) listDir(p).foreach(deleteRecursively)
-    Files.delete(p)
-  }
+object VersionedFactSink {
+  /** Versions each commit's vacuum keeps: the current one and the one
+    * before it, so a reader that resolved its files before a commit can
+    * still read them after it. */
+  val Retained = 2
 }

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.storage.StorageLevel
 
-import graft.etl.{Schemas, Transform}
+import graft.etl.{FactSink, Schemas, StarStore, Transform}
 
 /** Incremental/streaming ingestion — the generalization of the reference's
   * hand-rolled 50 K-row micro-batch loop with `ON DUPLICATE KEY UPDATE`
@@ -14,34 +14,36 @@ import graft.etl.{Schemas, Transform}
   * drop-directory, the SAME batch Transform (code shared, not duplicated),
   * and a `foreachBatch` merge into the partitioned star schema.
   *
-  * Merge contract (no transactional table format in this environment):
-  * valid enriched rows append to a year-partitioned staging store; the fact
-  * is then recomputed from staging FOR THE AFFECTED YEARS ONLY and those
-  * year partitions are dynamically overwritten. This keeps the declared
-  * exact `unique_user_count` semantic (SURVEY §5.2) — an additive fold of
+  * Merge contract: valid enriched rows append to a year-partitioned staging
+  * store; the fact is then recomputed from staging FOR THE AFFECTED YEARS
+  * ONLY and committed to the fact store ([[graft.etl.VersionedFactSink]])
+  * as one atomic, copy-on-write version. This keeps the declared exact
+  * `unique_user_count` semantic (SURVEY §5.2) — an additive fold of
   * per-batch distinct counts would double-count across batches, the
   * reference's acknowledged approximation — and makes late data for any
   * past date fold into its grain row, i.e. unbounded lateness tolerance
   * like the reference. Cost scales with the affected years' raw volume,
-  * not total history. A transactional MERGE sink can replace this by
-  * swapping [[FactMerger.mergeBatch]].
+  * not total history.
   */
 object StreamingIngest {
 
   /** Per-batch merge logic, usable from foreachBatch or called directly.
     * The fact store is reached only through the [[graft.etl.FactSink]]
-    * contract; `sink` defaults to the year-partitioned parquet
-    * implementation and is the seam where a transactional `MERGE` slots
-    * in. */
+    * contract; by default it is the store's own fact. Constructing a
+    * merger is a (re)start of the store's single writer, so it first
+    * releases whatever a crashed commit left behind. */
   final class FactMerger(
       spark: SparkSession,
       storeDir: String,
       userCountryMap: DataFrame,
       assetSportMap: DataFrame,
-      sink: graft.etl.FactSink = null) extends Serializable {
+      factSink: FactSink) extends Serializable {
 
-    private val factSink: graft.etl.FactSink =
-      Option(sink).getOrElse(new graft.etl.ParquetFactSink(storeDir))
+    def this(spark: SparkSession, storeDir: String, userCountryMap: DataFrame,
+        assetSportMap: DataFrame) =
+      this(spark, storeDir, userCountryMap, assetSportMap, StarStore.factSink(storeDir))
+
+    factSink.recover()
 
     private val stagingDir = s"$storeDir/staging_valid_txns"
 

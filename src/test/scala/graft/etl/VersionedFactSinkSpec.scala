@@ -1,8 +1,13 @@
 package graft.etl
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Paths, StandardOpenOption}
+
+import org.apache.spark.sql.Row
+import org.apache.spark.sql.functions.{assert_true, col}
+import org.apache.spark.sql.types.StructType
 
 import graft.SparkTestBase
+import graft.streaming.StreamingIngest
 
 class VersionedFactSinkSpec extends SparkTestBase {
   import spark.implicits._
@@ -48,14 +53,14 @@ class VersionedFactSinkSpec extends SparkTestBase {
     sink.mergePartitions(Seq((20220101, 2022, 1)).toDF("date_id", "year", "v"))
 
     // simulate a crashed writer: data landed, pointer swap never happened
-    val orphan = Paths.get(dir, "data", "crashed-writer", "y2030")
+    val orphan = Paths.get(dir, "data", "year=2030")
     Files.createDirectories(orphan)
     Seq((20300101, 2030, 9)).toDF("date_id", "year", "v")
       .write.mode("overwrite").parquet(orphan.toString)
     assert(!rows(sink.read(spark)).exists(_._2 == 2030), "orphan visible!")
 
     val deleted = sink.vacuum(keepVersions = 1)
-    assert(deleted.exists(_.contains("crashed-writer")), s"orphan kept: $deleted")
+    assert(deleted.exists(_.contains("year=2030")), s"orphan kept: $deleted")
     // current version survives vacuum intact...
     assert(rows(sink.read(spark)) ==
       Set((20210101, 2021, 1), (20220101, 2022, 1)))
@@ -74,7 +79,7 @@ class VersionedFactSinkSpec extends SparkTestBase {
     // must walk the manifests that EXIST, not assume a dense range
     val deleted = sink.vacuum(keepVersions = 5)
     assert(rows(sink.read(spark)).map(_._3).max == 7)
-    assert(deleted.isEmpty || deleted.forall(!_.contains("y2021")))
+    assert(deleted.isEmpty || deleted.forall(!_.contains("year=2021")))
   }
 
   test("vacuum on a non-normalized dir spelling never deletes live data") {
@@ -86,7 +91,7 @@ class VersionedFactSinkSpec extends SparkTestBase {
     sink.writeFull(Seq((20210101, 2021, 1)).toDF("date_id", "year", "v"))
     sink.mergePartitions(Seq((20220101, 2022, 2)).toDF("date_id", "year", "v"))
     val deleted = sink.vacuum(keepVersions = 1)
-    assert(deleted.forall(p => !p.contains("y2021") && !p.contains("y2022")),
+    assert(deleted.forall(p => !p.contains("year=2021") && !p.contains("year=2022")),
       s"vacuum deleted live data: $deleted")
     assert(rows(sink.read(spark)) ==
       Set((20210101, 2021, 1), (20220101, 2022, 2)))
@@ -163,5 +168,72 @@ class VersionedFactSinkSpec extends SparkTestBase {
     b.mergePartitions(Seq((20220102, 2022, 2)).toDF("date_id", "year", "v"))
     assert(b.currentVersion == 1)
     assert(rows(b.read(spark)) == Set((20210101, 2021, 1), (20220102, 2022, 2)))
+  }
+
+  test("a commit that fails after its claim releases it: the next commit lands") {
+    val dir = Files.createTempDirectory("graft_txn_fail").toString
+    val sink = new VersionedFactSink(dir)
+    sink.writeFull(Seq((20210101, 2021, 1)).toDF("date_id", "year", "v"))
+    // the slice's evaluation throws inside the data write (a failed task)
+    val bad = Seq((20220101, 2022, 2)).toDF("date_id", "year", "v")
+      .filter(assert_true(col("v") < 0).isNull)
+    intercept[Exception](sink.mergePartitions(bad))
+    assert(sink.currentVersion == 0)
+    sink.mergePartitions(Seq((20220101, 2022, 2)).toDF("date_id", "year", "v"))
+    assert(sink.currentVersion == 1)
+    assert(rows(sink.read(spark)) == Set((20210101, 2021, 1), (20220101, 2022, 2)))
+  }
+
+  test("a fact resolved before a merge still reads the complete pre-merge fact") {
+    val dir = Files.createTempDirectory("graft_txn_iso").toString
+    StarStore.writeFact(Seq((20210101, 2021, 1), (20220101, 2022, 1))
+      .toDF("date_id", "year", "v"), dir)
+    val before = StarStore.readFact(spark, dir)
+    // the merge rewrites the year the resolved frame reads
+    StarStore.factSink(dir).mergePartitions(
+      Seq((20220102, 2022, 2)).toDF("date_id", "year", "v"))
+    assert(rows(before) == Set((20210101, 2021, 1), (20220101, 2022, 1)))
+    assert(rows(StarStore.readFact(spark, dir)) ==
+      Set((20210101, 2021, 1), (20220102, 2022, 2)))
+  }
+
+  test("a merger restarted after a crashed commit releases the claim and converges") {
+    def df(schema: StructType, rows: Row*) =
+      spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
+    val assets = df(Schemas.assets, Row("DEL-001", "Ice Hockey"), Row("SKJ-001", "Ski Jumping"))
+    val subscribers = df(Schemas.subscribers, Row("u1", "P1"), Row("u2", "P2"))
+    val postal2city = df(Schemas.postal2city, Row("P1", 10), Row("P2", 20))
+    val cities = df(Schemas.cities, Row(10, 1), Row(20, 2))
+    val countries = df(Schemas.countries, Row(1, "Norway"), Row(2, "Finland"))
+    val b0 = df(Schemas.streamingTxns, Row(1L, "u1", "DEL-001", "2021-12-31", 30, 1),
+      Row(2L, "u2", "SKJ-001", "2022-01-01", 40, 1))
+    val b1 = df(Schemas.streamingTxns, Row(3L, "u1", "DEL-001", "2021-12-31", 50, 1),
+      Row(4L, "u2", "DEL-001", "2022-01-01", 25, 1))
+    val store = Files.createTempDirectory("graft_txn_restart").toString
+    def merger() = new StreamingIngest.FactMerger(spark, store,
+      Transform.userCountry(subscribers, postal2city, cities), Transform.assetSport(assets))
+
+    val first = merger()
+    first.mergeBatch(b0, 0L)
+    // the writer crashes while committing batch 1: version 1 is claimed
+    // and the data write has landed, but the pointer never swapped
+    val fact = Paths.get(store, "fact_streaming_summary")
+    Files.write(fact.resolve("_versions").resolve("v00001.json"),
+      Array.emptyByteArray, StandardOpenOption.CREATE_NEW)
+    val orphan = fact.resolve("data").resolve("_commit-crashed-writer")
+    Seq((20220101, 2022, 9)).toDF("date_id", "year", "v")
+      .write.partitionBy("year").parquet(orphan.toString)
+    // without a restart the claim blocks every commit
+    intercept[IllegalStateException](first.mergeBatch(b1, 1L))
+
+    // a restarted merger replays the batch and commits it
+    merger().mergeBatch(b1, 1L)
+    assert(!Files.exists(orphan), "crashed commit's files kept")
+    val streamed = StarStore.readFact(spark, store)
+    val oneShot = Pipeline.run(spark, b0.unionByName(b1), assets, subscribers,
+      postal2city, cities, countries).fact.select(streamed.columns.map(col).toIndexedSeq: _*)
+    assert(streamed.count() == 3)
+    assert(streamed.exceptAll(oneShot).isEmpty)
+    assert(oneShot.exceptAll(streamed).isEmpty)
   }
 }
