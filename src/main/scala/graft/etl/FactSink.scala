@@ -19,6 +19,9 @@ trait FactSink extends Serializable {
 
   def read(spark: SparkSession): DataFrame
 
+  /** The committed version, or -1 for an empty table. */
+  def currentVersion: Int = -1
+
   /** Called when the writer (re)starts: clear what a crashed commit left. */
   def recover(): Unit = ()
 }

@@ -71,13 +71,13 @@ object Transform {
         col("event_date").isNotNull)
       .na.fill(0, Seq("minutes_streamed", "completed"))
 
-  /** Retention accounting (README.md:200-206) in ONE pass of conditional
-    * aggregates — no extra anti-join scans of the fact source. The source
-    * date bounds ride along in the same pass so the dim_date spine needs no
-    * scan of its own (the reference re-scanned both sources for min/max,
-    * loadAnalyticsDB R:189-197). THE accounting aggregate list — shared by
-    * the standalone pass ([[accounting]]) and the observed single-pass form
-    * (`Pipeline.runSinglePass`), so the two can never drift. */
+  /** Retention accounting (README.md:200-206) as conditional aggregates
+    * that `Pipeline.run` observes on the fact's own pass: no scan of the
+    * source of their own. The source date bounds ride along, so the
+    * dim_date spine needs no scan either (the reference re-scanned both
+    * sources for min/max, loadAnalyticsDB R:189-197). The standalone pass
+    * ([[accounting]]) is only the fallback for a load whose gated output is
+    * empty, where the observation resolves to an empty row. */
   val accountingAggs: Seq[Column] = Seq(
     count(lit(1)).as("read"),
     sum(when(col("country_id").isNull, 1L).otherwise(0L)).as("missing_country"),

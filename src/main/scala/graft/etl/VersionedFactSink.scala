@@ -99,8 +99,7 @@ final class VersionedFactSink(rawDir: String) extends FactSink {
     (schema, lines.filterNot(_.startsWith("#")))
   }
 
-  /** The committed version, or -1 for an empty table. */
-  def currentVersion: Int =
+  override def currentVersion: Int =
     if (!Files.exists(latestPtr)) -1
     else new String(Files.readAllBytes(latestPtr), StandardCharsets.UTF_8).trim.toInt
 
@@ -182,9 +181,10 @@ final class VersionedFactSink(rawDir: String) extends FactSink {
     val (schemaDdl, files) = readManifest(v)
     require(schemaDdl.nonEmpty, s"version $v has no schema")
     val schema = StructType.fromDDL(schemaDdl)
-    if (files.isEmpty) // a truncate to zero rows is a valid, empty table
-      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
-    else spark.read.schema(schema).option("basePath", dataDir.toString)
+    if (files.isEmpty) { // a truncate to zero rows is a valid, empty table
+      val (year, rest) = schema.partition(_.name == "year")
+      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], StructType(rest ++ year))
+    } else spark.read.schema(schema).option("basePath", dataDir.toString)
       .parquet(files.map(f => dataDir.resolve(f).toString): _*)
   }
 

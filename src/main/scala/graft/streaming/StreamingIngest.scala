@@ -1,5 +1,7 @@
 package graft.streaming
 
+import java.nio.file.{Files, Paths}
+
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
@@ -23,7 +25,10 @@ import graft.etl.{FactSink, Schemas, StarStore, Transform}
   * reference's acknowledged approximation — and makes late data for any
   * past date fold into its grain row, i.e. unbounded lateness tolerance
   * like the reference. Cost scales with the affected years' raw volume,
-  * not total history.
+  * not total history. So the history must reach the fact through the
+  * merger, which refuses a fact loaded without staging. A reload AFTER
+  * streaming (`StarStore.writeFact` over a store with staging) is not
+  * caught: the next merge recomputes its years from the stale staging.
   */
 object StreamingIngest {
 
@@ -46,6 +51,11 @@ object StreamingIngest {
     factSink.recover()
 
     private val stagingDir = s"$storeDir/staging_valid_txns"
+    // a merge recomputes its years from staging alone (see the object doc)
+    if (factSink.currentVersion >= 0 && !Files.exists(Paths.get(stagingDir)))
+      throw new IllegalStateException(s"the fact of $storeDir was loaded " +
+        "without merge staging, so a merge would drop its rows: seed the " +
+        "history through the merger (start the stream over it) instead")
 
     /** "Dimension maps are resolved once at start" (the reference's
       * lookup-map discipline) — but a lazy frame re-EXECUTES its

@@ -1,6 +1,7 @@
 package graft.etl
 
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.functions.{col, udf}
 import org.apache.spark.sql.types.StructType
 
 import graft.SparkTestBase
@@ -58,11 +59,10 @@ class EtlPipelineSpec extends SparkTestBase {
   test("single-pass (observed) ETL produces identical stats, fact, and dims") {
     val obs = Pipeline.runSinglePass(
       spark, txns, assets, subscribers, postal2city, cities, countries)
-    // misuse diagnoses instead of hanging: finish() before any action
-    val premature = intercept[IllegalArgumentException](obs.finish())
-    assert(premature.getMessage.contains("materialized"))
+    // the load ran eagerly: finish() before any action on the fact has the stats
+    assert(obs.finish()._1 == result.stats)
     val factRows = obs.fact.orderBy("date_id", "country_id", "sport_name")
-      .collect().toSeq // the one action — metrics exist after this
+      .collect().toSeq
     val (stats, dimDate) = obs.finish()
     assert(stats == result.stats)
     assert(factRows == result.fact
@@ -187,6 +187,23 @@ class EtlPipelineSpec extends SparkTestBase {
       Row(3L, "u2", "SKJ-001", "2022-13-45", 30, 0)) // unparseable date
     assertNothingLoaded(dropped, Pipeline.EtlStats(read = 3, missingCountry = 1,
       recoveredByInference = 0, missingSport = 1, missingDate = 3, valid = 0))
+  }
+
+  test("a load reads each source row once: the ETL, the fact write and the dims") {
+    val reads = spark.sparkContext.longAccumulator("source reads")
+    // tap user_id, which every pass over the source needs; the rollup never
+    // reads transaction_id, so column pruning would drop a tap there
+    val tap = udf { (u: String) => reads.add(1); u }.asNondeterministic()
+    val tapped = txns.withColumn("user_id", tap(col("user_id")))
+    for (load <- Seq(Pipeline.run _, Pipeline.runSinglePass _)) {
+      reads.reset()
+      val etl = load(spark, tapped, assets, subscribers, postal2city, cities, countries)
+      val dir = java.nio.file.Files.createTempDirectory("graft_one_pass").toString
+      StarStore.writeFact(etl.fact, dir)
+      val (_, dimDate) = etl.finish()
+      StarStore.writeDims(dimDate, etl.dimCountry, etl.dimSport, dir)
+      assert(reads.sum == 12)
+    }
   }
 
   test("union of two sources aggregates identically to a single source (U1)") {

@@ -107,7 +107,7 @@ class VersionedFactSinkSpec extends SparkTestBase {
     sink.writeFull(Seq.empty[(Int, Int, Int)].toDF("date_id", "year", "v"))
     val empty = sink.read(spark)
     assert(empty.count() == 0)
-    assert(empty.columns.toSeq == Seq("date_id", "year", "v"))
+    assert(empty.columns.toSeq == sink.readVersion(spark, 0).columns.toSeq)
     // and time travel to the non-empty version still works
     assert(rows(sink.readVersion(spark, 0)) == Set((20210101, 2021, 1)))
   }

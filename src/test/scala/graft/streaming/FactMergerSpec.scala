@@ -6,10 +6,11 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.storage.StorageLevel
 
 import graft.SparkTestBase
-import graft.etl.{FactSink, Transform}
+import graft.etl.{FactSink, StarStore, Transform}
 
 /** The stream merger owns its two lookup maps: it caches them itself, and
-  * a merger over changed dimensions never reads an earlier merger's map. */
+  * a merger over changed dimensions never reads an earlier merger's map.
+  * It refuses a fact it could not merge into without losing rows. */
 class FactMergerSpec extends SparkTestBase {
   import spark.implicits._
 
@@ -60,5 +61,17 @@ class FactMergerSpec extends SparkTestBase {
     val after = new RecordingSink
     merger(userCountry("P2"), after).mergeBatch(txn(2L, "2022-01-02"), 1L)
     assert(after.merged == Seq(Seq((20220102, 2))))
+  }
+
+  test("a merger over a reloaded fact without merge staging refuses to start") {
+    // a reload holds two 2022 transactions; a merge recomputing 2022 from
+    // its own staging alone would keep only the merged one
+    val store = Files.createTempDirectory("graft_reloaded").toString
+    StarStore.writeFact(Transform.rollup(Transform.qualityGate(Transform.enrich(
+      txn(1L, "2022-01-01").unionByName(txn(2L, "2022-01-02")),
+      userCountry("P1"), assetSport))), store)
+    val e = intercept[IllegalStateException](
+      new StreamingIngest.FactMerger(spark, store, userCountry("P1"), assetSport))
+    assert(e.getMessage.contains("seed the history through the merger"), e.getMessage)
   }
 }
