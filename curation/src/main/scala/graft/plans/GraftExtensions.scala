@@ -17,9 +17,10 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Li
   *     [[SrpBandBuckets]], all signed-random-projection band buckets of a
   *     vector in one pass.
   *
-  * Usable programmatically (`builder.withExtensions(new GraftExtensions)`,
-  * what [[graft.Engine.session]] does) or via
-  * `--conf spark.sql.extensions=graft.plans.GraftExtensions`.
+  * Usable programmatically (`builder.withExtensions(new GraftExtensions)`)
+  * or via `spark.sql.extensions=graft.plans.GraftExtensions`, which the
+  * curation build passes as a system property to every session
+  * [[graft.Engine.session]] builds there.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 

@@ -15,9 +15,7 @@ object DimBuilder {
     * bounds (empty or all-unparseable input) give an empty spine. */
   def dimDateFromBounds(spark: SparkSession, min: java.sql.Date,
       max: java.sql.Date): DataFrame = {
-    val spine = spark.range(1).select(explode(sequence(
-      lit(min).cast(DateType), lit(max).cast(DateType), expr("interval 1 day")))
-      .as("full_date"))
+    val spine = DateParts.spine(spark, lit(min).cast(DateType), lit(max).cast(DateType))
     DateParts.withDateParts(spine, col("full_date"))
       .select("date_id", "full_date", "year", "quarter", "month", "week",
         "day_of_month", "day_of_week")

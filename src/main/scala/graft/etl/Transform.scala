@@ -13,9 +13,11 @@ import graft.functions.{DateParts, SportInference}
   * by MySQL upserts (R:369-406) collapse into Spark's built-in
   * partial+final hash aggregate — one shuffle on the grain keys.
   *
-  * Scale notes: the dim side of both joins is bounded (subscribers-derived
-  * user→country map is the largest; if it outgrows the broadcast threshold
-  * AQE demotes to shuffle join and the plan still holds). The grain keys
+  * Scale notes: `enrich` forces both lookup maps to broadcast with a
+  * `broadcast()` hint, which AQE never demotes to a shuffle join whatever
+  * the map's size. The subscribers-derived user→country map is the
+  * larger, one row per subscriber, so it must fit in the driver's and
+  * each executor's memory. The grain keys
   * (date × country × sport) are low-cardinality, so the rollup shuffle
   * moves pre-combined partial rows, not raw transactions.
   */

@@ -2,6 +2,8 @@ package graft.streaming
 
 import java.nio.file.{Files, Paths}
 
+import org.apache.hadoop.fs.Path
+
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
@@ -29,8 +31,17 @@ import graft.etl.{FactSink, Schemas, StarStore, Transform}
   * merger, which refuses a fact loaded without staging. A reload AFTER
   * streaming (`StarStore.writeFact` over a store with staging) is not
   * caught: the next merge recomputes its years from the stale staging.
+  *
+  * One query per store: staged batches are named by `batchId`, and a query
+  * started from a new checkpoint numbers its batches from 0 again, so it
+  * would overwrite an earlier query's staged batches and the next recompute
+  * of their years would lose those rows. `start` therefore refuses a new
+  * checkpoint over a store whose staging already holds batches; restart
+  * the stream from its own checkpoint instead.
   */
 object StreamingIngest {
+
+  private def stagingOf(storeDir: String): String = s"$storeDir/staging_valid_txns"
 
   /** Per-batch merge logic, usable from foreachBatch or called directly.
     * The fact store is reached only through the [[graft.etl.FactSink]]
@@ -50,7 +61,7 @@ object StreamingIngest {
 
     factSink.recover()
 
-    private val stagingDir = s"$storeDir/staging_valid_txns"
+    private val stagingDir = stagingOf(storeDir)
     // a merge recomputes its years from staging alone (see the object doc)
     if (factSink.currentVersion >= 0 && !Files.exists(Paths.get(stagingDir)))
       throw new IllegalStateException(s"the fact of $storeDir was loaded " +
@@ -85,9 +96,9 @@ object StreamingIngest {
 
       // affected years: read the year= partition directories just written —
       // re-deriving them from `valid` would run the whole enrichment twice
-      val fs = new org.apache.hadoop.fs.Path(batchDir)
+      val fs = new Path(batchDir)
         .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val years = fs.listStatus(new org.apache.hadoop.fs.Path(batchDir))
+      val years = fs.listStatus(new Path(batchDir))
         .map(_.getPath.getName)
         .filter(_.startsWith("year="))
         .map(_.stripPrefix("year=").toInt)
@@ -109,6 +120,16 @@ object StreamingIngest {
       cities: DataFrame, checkpointDir: String,
       trigger: Trigger = Trigger.AvailableNow(),
       maxFilesPerTrigger: Option[Int] = None): StreamingQuery = {
+    // a started query leaves `metadata` (its id) in its checkpoint
+    val conf = spark.sparkContext.hadoopConfiguration
+    val metadata = new Path(checkpointDir, "metadata")
+    val staging = new Path(stagingOf(storeDir))
+    val stagingFs = staging.getFileSystem(conf)
+    if (!metadata.getFileSystem(conf).exists(metadata) && stagingFs.exists(staging) &&
+        stagingFs.listStatus(staging).exists(_.getPath.getName.startsWith("batch=")))
+      throw new IllegalStateException(s"the staging of $storeDir already " +
+        "holds another query's batches, which a query from a new checkpoint " +
+        "would overwrite: restart the stream from its own checkpoint")
     val merger = new FactMerger(spark, storeDir,
       Transform.userCountry(subscribers, postal2city, cities),
       Transform.assetSport(assets))

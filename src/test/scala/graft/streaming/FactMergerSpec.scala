@@ -3,6 +3,7 @@ package graft.streaming
 import java.nio.file.Files
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.functions.sum
 import org.apache.spark.storage.StorageLevel
 
 import graft.SparkTestBase
@@ -73,5 +74,37 @@ class FactMergerSpec extends SparkTestBase {
     val e = intercept[IllegalStateException](
       new StreamingIngest.FactMerger(spark, store, userCountry("P1"), assetSport))
     assert(e.getMessage.contains("seed the history through the merger"), e.getMessage)
+  }
+
+  test("a second stream over a staged store refuses to start; a restart over the first checkpoint merges") {
+    val store = Files.createTempDirectory("graft_two_streams").toString
+    def drop(rows: DataFrame*): String = {
+      val dir = Files.createTempDirectory("graft_drop").toString
+      rows.foreach(_.write.mode("append").parquet(dir))
+      dir
+    }
+    def stream(dropDir: String, checkpoint: String): Unit = {
+      val q = StreamingIngest.start(spark, dropDir, store,
+        Seq(("DEL-001", "Ice Hockey")).toDF("asset_id", "sport"),
+        Seq(("u1", "P1")).toDF("user_id", "postal_code"),
+        Seq(("P1", 10)).toDF("postal_code", "city_id"),
+        Seq((10, 1)).toDF("city_id", "country_id"), checkpoint)
+      q.processAllAvailable()
+      q.stop()
+    }
+    def transactions: Long =
+      StarStore.readFact(spark, store).agg(sum("transaction_count")).head().getLong(0)
+
+    val firstDrop = drop(txn(1L, "2022-01-01"))
+    val firstCheckpoint = Files.createTempDirectory("graft_ckpt").toString
+    stream(firstDrop, firstCheckpoint)
+    assert(transactions == 1)
+    // its batch 0 would overwrite the first query's staged batch 0
+    val e = intercept[IllegalStateException](stream(drop(txn(2L, "2022-01-02")),
+      Files.createTempDirectory("graft_ckpt").toString))
+    assert(e.getMessage.contains("restart the stream from its own checkpoint"), e.getMessage)
+    txn(3L, "2022-01-03").write.mode("append").parquet(firstDrop)
+    stream(firstDrop, firstCheckpoint)
+    assert(transactions == 2)
   }
 }
