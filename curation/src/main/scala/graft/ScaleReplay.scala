@@ -3,66 +3,48 @@ package graft
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** 10× input replay — the stress test behind SCALING.md's scale table.
+/** Deterministic `factor`× replication of an SF directory: the big tables
+  * are unioned from re-keyed copies, so a replica keeps the relational
+  * and near-duplicate structure of its base at `factor` times the volume.
+  * `ScaleReplaySpec` checks that the replica preserves what it claims.
   *
-  * Materializes a deterministic `factor`× copy of an SF directory by
-  * unioning re-keyed copies of the big tables, then times the most
-  * expensive contract entries on both inputs and prints the wall-time
-  * scaling factor. Near-linear factors validate the plan arguments
-  * ("one scan per stage", "pairs meet on an equi-join", "cost scales with
-  * the batch"); anything super-linear is the next round's target.
-  *
-  * Corpus-construction choices, so the factors measure PLANS and not
-  * artifacts of the replication itself:
+  * Replication choices, so a replica scales its base's work and not an
+  * artifact of the copying itself:
   *
   *  - Join keys are offset per copy (`key + i · (max+1)`) CONSISTENTLY
   *    across tables (l_orderkey/o_orderkey, o_custkey/c_custkey,
   *    l_partkey/p_partkey), so every join's selectivity per key is
   *    unchanged and fact/dimension relations stay intact. Dimension
   *    tables bounded by the schema (nation, region) are NOT replicated —
-  *    at 100 TB the dims don't grow with the fact either.
+  *    the dims don't grow with the fact either.
   *  - Document text is re-tokenized per copy (every token prefixed with
-  *    `c<i>`): token counts, per-doc shingle counts, and the WITHIN-copy
+  *    `c<i>_`): token counts, per-doc shingle counts, and the WITHIN-copy
   *    near-duplicate structure are exactly isomorphic to the original,
   *    while ACROSS copies no shingle collides — the corpus becomes
   *    `factor` independent shards with the original's duplicate rate, so
   *    pair-producing dedup work scales ×factor. (Naively unioning
   *    IDENTICAL copies would instead explode every fingerprint group
-  *    quadratically — a 100× pair blowup that measures the replication
-  *    trick, not the operator. All copies are transformed, including
-  *    copy 0, so per-doc work matches across the comparison only modulo
-  *    the 3-char token prefix.)
+  *    quadratically.)
   *  - Embeddings are re-keyed and each copy i>0 is rotated by a random
-  *    orthogonal matrix (see `rotated` below): within-copy cosine
-  *    structure is exactly the original's, cross-copy cosines
-  *    concentrate at ~N(0, 1/dim). The pinned query set (`vec_id < 5`)
-  *    lives in the unrotated copy 0 and stays constant size, so ANN
-  *    entries measure corpus-side scaling of build + probe.
-  *    PAIR-PRODUCING embedding entries (d05 cosine near-dup, d15
-  *    SemDeDup) stay OUT of the replay list: at dim 64 a cross-copy
-  *    cosine is ~N(0, 1/64), and with ~factor²·n²/2 cross pairs the
-  *    tail above a low near-dup threshold is not negligibly rare — the
-  *    replica cannot guarantee shard isolation for them the way the
-  *    `c<i>_` token tag does for shingles, so their factors would mix
-  *    operator cost with replication noise.
+  *    orthogonal matrix ([[orthogonal]]): within-copy cosine structure is
+  *    exactly the original's, cross-copy cosines concentrate at
+  *    ~N(0, 1/dim). The pinned query set (`vec_id < 5`) lives in the
+  *    unrotated copy 0 and stays constant size. At dim 64 a cross-copy
+  *    cosine is ~N(0, 1/64), so the replica cannot guarantee shard
+  *    isolation for pair-producing embedding work the way the `c<i>_`
+  *    token tag does for shingles.
   *
-  * Usage: runMain graft.ScaleReplay [baseSfDir] [outDir] [factor] [entries] [tables]
-  * Writes the replicated tables once (skipped when `_READY` exists; the
-  * marker records which tables the replica holds) and prints one
-  * `[replay]` line per (entry, input) plus a factor summary. The optional
-  * `tables` list restricts the replica to what the timed entries read —
-  * the 1000× documents rung has no reason to write 600 M lineitem rows.
+  * [[replicate]] writes the tables once (skipped when `_READY` exists; the
+  * marker records which tables the replica holds); the optional `only`
+  * set restricts the replica to the named tables.
   */
 object ScaleReplay {
 
   /** Tables replicated with key offsets; everything else copies as-is.
-    * `only` restricts the build to the named tables (default: all) — the
-    * 1000× rung times three documents-only entries and has no reason to
-    * write a 600 M-row lineitem alongside them; the `_READY` marker
-    * records which tables the replica holds so a narrower replica can't
-    * silently serve a broader request. `private[graft]` so
-    * ScaleReplaySpec can exercise the builder without going through
-    * main() (which owns and stops its own session). */
+    * `only` restricts the build to the named tables (default: all), so a
+    * documents-only replica need not write a 600 M-row lineitem; the
+    * `_READY` marker records which tables the replica holds so a narrower
+    * replica can't silently serve a broader request. */
   private[graft] val allTables = Seq("lineitem", "orders", "customer",
     "part", "documents", "embeddings", "nation", "region", "supplier",
     "events")
@@ -173,14 +155,11 @@ object ScaleReplay {
       // query set (vec_id < 5) lives — is bit-unchanged (float→double→
       // ×1.0→float is exact). Copies sharing a matrix (i ≡ j mod 32 at
       // factor > 32) are exact duplicates of each other modulo vec_id;
-      // that is sound for every replay entry that reads the replica —
-      // the ANN/probe/serve entries time routed candidate volume against
-      // a FIXED copy-0 query set, and candidate volume scales ×factor
+      // that is sound for work against a FIXED copy-0 query set (ANN
+      // build, probe, serve), whose candidate volume scales ×factor
       // identically whether cross-copy mass is decorrelated or
-      // duplicated. The pair-producing embedding entries (d05, d15) stay
-      // out of the replay list for exactly this class of reason (see the
-      // class doc) — 32 rotations bound cross-copy collision structure
-      // for everything that IS listed.
+      // duplicated. Pair-producing embedding work is not isolated by
+      // shard for exactly this class of reason (see the object doc).
       val nRot = math.max(1, math.min(factor, 32))
       val bank = typedlit((0 until nRot).map { i =>
         if (i == 0) Seq.tabulate(dim, dim)((r, c) => if (r == c) 1.0d else 0.0d)
@@ -230,371 +209,5 @@ object ScaleReplay {
       }
     }
     q
-  }
-
-  /** The round-6 verdict's "10 most expensive entries" list. */
-  private val defaultEntries = Seq(
-    "d02_ngram_jaccard", "d03r_lsh_pairs", "d07_dedup_clusters",
-    "d08_dedup_manifest", "d10r_manifest_lsh", "t12_lm_bigram_score",
-    "t15_curation_funnel", "q17_etl_star_rollup", "q48_sliding_distinct",
-    "stream_ingest_bulk")
-
-  private def runOnce(spark: SparkSession, name: String, dir: String): Double =
-    name match {
-      case "stream_ingest_bulk" =>
-        Bench.streamIngestOnce(spark, dir, filesPerTrigger = None)._2
-      case q =>
-        val t0 = System.nanoTime()
-        Goldens.allQueries(q)(spark, dir)
-          .write.mode("overwrite").format("noop").save()
-        (System.nanoTime() - t0) / 1e9
-    }
-
-  /** The QUERY-axis rung (r10 verdict #3): every corpus-axis replay
-    * above holds the broadcast-capped query side constant; this one
-    * holds the CORPUS fixed (the base embeddings + one untimed
-    * IVF/PQ build) and scales the query count ×`qScale`, executed
-    * through [[graft.similarity.Similarity.chunkedByQuery]] with a
-    * fixed per-chunk budget — so the big run pays qScale× chunks, each
-    * broadcasting the same bounded query slice. A near-linear factor
-    * validates that chunked execution costs O(chunks) with bounded
-    * per-chunk memory (the time-for-memory trade the broadcast cap's
-    * refusal prescribes); the query count caps at the corpus size. */
-  private def chunkedQueryOnce(spark: SparkSession, dir: String,
-      ivf: graft.similarity.Similarity.IvfIndex,
-      pq: graft.similarity.Similarity.PqIndex,
-      nq: Long, chunkBudget: Int): Double = {
-    import graft.similarity.Similarity
-    val emb = Tables(spark, dir, "embeddings")
-    val nChunks = math.max(1L, (nq + chunkBudget - 1) / chunkBudget).toInt
-    val t0 = System.nanoTime()
-    Similarity.chunkedByQuery(col("vec_id") < nq, nChunks)(qf =>
-      Similarity.ivfPqTopK(ivf, pq, emb, qf, topK = 10))
-      .write.mode("overwrite").format("noop").save()
-    (System.nanoTime() - t0) / 1e9
-  }
-
-  private val QueryAxisEntry = "s15q_chunked"
-
-  /** The BM25 stored-serve decomposition rung (round 12): builds the
-    * persisted index over the given dir's documents ONCE (untimed —
-    * production is build-once/serve-many), then measures the sparse
-    * serve's two round-12 levers separately on the SAME store:
-    *
-    *  - `cold_full`: frame caching off, term-bucket pruning off — every
-    *    cost visible: the df/(N, Σdl) derivation (one full tf scan) plus
-    *    the scoring join's full tf scan;
-    *  - `cold_pruned`: caching off, pruning on — the scoring scan reads
-    *    only the query terms' buckets (≈ nTerms/64 of a bucket-clustered
-    *    index), leaving the df derivation as the remaining corpus-sized
-    *    term;
-    *  - `warm`: defaults (caching on, pruning on), repeat call at the
-    *    same store state — the QueryServe trigger shape: df/stats served
-    *    from the registry, cost O(request) + cached lookups.
-    *
-    * cold_full − cold_pruned isolates the pruning win; cold_pruned −
-    * warm isolates the amortization win; together they are the round-12
-    * serve story measured on one store. */
-  private val Bm25AxisEntry = "bm25p_axis"
-
-  private def bm25PruneAxis(spark: SparkSession, dir: String): Unit = {
-    import graft.text.Retrieval
-    val docs = Tables(spark, dir, "documents")
-    val nDocs = docs.count()
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_replay_bm25").toString
-    Retrieval.buildIndex(spark, docs, s"$root/corpus")
-    val queries = Retrieval
-      .probeQueriesFromStore(spark, s"$root/corpus").localCheckpoint()
-    def serve(cacheOn: Boolean, pruneOn: Boolean): Double = {
-      Caches.releaseAll(blocking = true)
-      spark.catalog.clearCache()
-      spark.conf.set("graft.retrieval.cacheStoredFrames", cacheOn.toString)
-      spark.conf.set("graft.retrieval.pruneTermBuckets", pruneOn.toString)
-      val t0 = System.nanoTime()
-      Retrieval.bm25QueryTopKFromStore(spark, s"$root/corpus", queries)
-        .write.mode("overwrite").format("noop").save()
-      (System.nanoTime() - t0) / 1e9
-    }
-    try {
-      serve(cacheOn = false, pruneOn = false) // warmup, untimed
-      val coldFull = serve(cacheOn = false, pruneOn = false)
-      val coldPruned = serve(cacheOn = false, pruneOn = true)
-      // warm = repeat call with defaults at the same store state; the
-      // first (cold) call materializes the registered frames untimed
-      spark.conf.unset("graft.retrieval.cacheStoredFrames")
-      spark.conf.unset("graft.retrieval.pruneTermBuckets")
-      Caches.releaseAll(blocking = true)
-      spark.catalog.clearCache()
-      Retrieval.bm25QueryTopKFromStore(spark, s"$root/corpus", queries)
-        .write.mode("overwrite").format("noop").save()
-      val t0 = System.nanoTime()
-      Retrieval.bm25QueryTopKFromStore(spark, s"$root/corpus", queries)
-        .write.mode("overwrite").format("noop").save()
-      val warm = (System.nanoTime() - t0) / 1e9
-      println(f"[replay] $Bm25AxisEntry%-24s cold_full=$coldFull%7.1f s  " +
-        f"cold_pruned=$coldPruned%7.1f s  warm=$warm%7.2f s  " +
-        f"(index over $nDocs docs; pruning saves ${coldFull - coldPruned}%.1f s " +
-        f"of scoring scan, caching saves ${coldPruned - warm}%.1f s of df derivation)")
-    } finally {
-      spark.conf.unset("graft.retrieval.cacheStoredFrames")
-      spark.conf.unset("graft.retrieval.pruneTermBuckets")
-    }
-  }
-
-  /** The round-14 PRF/LM serve rung (r13 verdict #1/#3): one store
-    * built untimed over the REPLICATED corpus, then the stored-PRF
-    * serve timed with the doc-keyed forward index ON (the round-14
-    * stage-2 seek) vs OFF (the r13 tf-scan fallback, via the conf
-    * escape hatch — same code, same store, one dial) — the honest
-    * at-scale measurement of the fwd win, where the 10× rung was still
-    * fixture-dominated. The Dirichlet LM serve runs cold on the same
-    * store, proving ITS term-bucket-pruning claim at the same rung. */
-  private val PrfAxisEntry = "t56_prf_axis"
-
-  private def prfAxis(spark: SparkSession, dir: String): Unit = {
-    import graft.text.Retrieval
-    val docs = Tables(spark, dir, "documents")
-    val nDocs = docs.count()
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_replay_prf").toString
-    Retrieval.buildIndex(spark, docs, s"$root/corpus")
-    val queries = Retrieval
-      .probeQueriesFromStore(spark, s"$root/corpus").localCheckpoint()
-    def prf(fwdOn: Boolean): Double = {
-      Caches.releaseAll(blocking = true)
-      spark.catalog.clearCache()
-      spark.conf.set("graft.retrieval.useForwardIndex", fwdOn.toString)
-      val t0 = System.nanoTime()
-      Retrieval.bm25PrfTopKFromStore(spark, s"$root/corpus", queries)
-        .write.mode("overwrite").format("noop").save()
-      (System.nanoTime() - t0) / 1e9
-    }
-    try {
-      prf(fwdOn = true) // warmup (classload/codegen), untimed
-      val seek = prf(fwdOn = true)
-      val scan = prf(fwdOn = false)
-      spark.conf.unset("graft.retrieval.useForwardIndex")
-      Caches.releaseAll(blocking = true)
-      spark.catalog.clearCache()
-      val t0 = System.nanoTime()
-      Retrieval.lmTopKFromStore(spark, s"$root/corpus", queries)
-        .write.mode("overwrite").format("noop").save()
-      val lm = (System.nanoTime() - t0) / 1e9
-      println(f"[replay] $PrfAxisEntry%-24s cold_fwd=$seek%7.1f s  " +
-        f"cold_scan=$scan%7.1f s  lm_cold=$lm%7.1f s  " +
-        f"(index over $nDocs docs; the fwd seek saves " +
-        f"${scan - seek}%.1f s of stage-2 postings scan per serve call)")
-    } finally spark.conf.unset("graft.retrieval.useForwardIndex")
-  }
-
-  /** The REQUEST-axis rung for the round-11 serving path: stores built
-    * once untimed (production is build-once/serve-many), then one
-    * hybrid serve of a 20-request batch vs one of 20·factor requests —
-    * the axis a deployed serving tier actually scales on. Requests are
-    * member text+vector pairs relabeled into their own id space (the
-    * external signature). A strongly sub-linear factor validates that
-    * per-request cost falls as the batch amortizes the fixed probe
-    * plan; the request count caps at the joined corpus size. */
-  private val ServeAxisEntry = "t53q_serve"
-
-  private def serveAxis(spark: SparkSession, base: String, factor: Int): Unit = {
-    import graft.similarity.{IndexStore, Similarity}
-    val docs = Tables(spark, base, "documents")
-    val emb = Tables(spark, base, "embeddings")
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_replay_serve").toString
-    graft.text.Retrieval.buildIndex(spark, docs, s"$root/corpus")
-    val ivf = Similarity.buildIvfIndex(emb)
-    val pq = Similarity.buildPqIndex(emb)
-    IndexStore.saveIvf(ivf, s"$root/ivf")
-    IndexStore.savePq(pq, s"$root/pq")
-    ivf.release(); pq.release()
-    // request selection by ROW RANK, not by id arithmetic (ADVICE r11:
-    // `query_id < 900000 + nq` silently assumed doc/vec ids start at 0 —
-    // a base dir whose ids start elsewhere yields fewer than nq, or
-    // zero, base requests and a meaningless factor). The unpartitioned
-    // window is bounded: it ranks the joined request fixture, never a
-    // replica-scaled frame.
-    val wReq = org.apache.spark.sql.expressions.Window.orderBy("query_id")
-    val requests = docs
-      .select((col("doc_id") + 900000L).as("query_id"),
-        col("text").as("query_text"))
-      .join(emb.select((col("vec_id") + 900000L).as("query_id"),
-        col("embedding")), "query_id")
-      .withColumn("req_rank", row_number().over(wReq))
-    val corpusN = requests.count()
-    def serveOnce(nq: Long): Double = {
-      val t0 = System.nanoTime()
-      graft.text.Retrieval.hybridTopKFromStoresExternal(spark,
-        s"$root/corpus", s"$root/ivf", s"$root/pq",
-        requests.filter(col("req_rank") <= nq)
-          .drop("req_rank"))
-        .write.mode("overwrite").format("noop").save()
-      (System.nanoTime() - t0) / 1e9
-    }
-    val nqBase = 20L
-    val nqBig = math.min(nqBase * factor, corpusN)
-    serveOnce(nqBase) // warmup (classload/codegen + store load), untimed
-    val tBase = serveOnce(nqBase)
-    val tBig = serveOnce(nqBig)
-    val f = tBig / tBase
-    println(f"[replay] $ServeAxisEntry%-24s base=$tBase%7.1f s  " +
-      f"x${nqBig / nqBase}=$tBig%7.1f s  factor=$f%5.1f " +
-      f"(REQUEST axis: $nqBase -> $nqBig requests, fixed stores over " +
-      f"$corpusN joined rows)")
-  }
-
-  /** The STREAMED-server request rung (round 13, r12 verdict #6 — the
-    * request axis measured to ×100 linear through the direct library
-    * call; this closes it at the ladder's limit THROUGH the server):
-    * stores built once untimed, then a [[graft.streaming.QueryServe]]
-    * stream drains a 20-request drop (the t53q base convention) vs a
-    * `20·factor`-request drop, wall-clocked end to end — stream
-    * startup, the high-water/straddle guards, the chunked executor,
-    * slice writes and marker publishes included. The big drop runs
-    * under a LOWERED broadcast cap so the batch provably rides the
-    * degraded chunked path (r11 verdict #1): the rung measures the
-    * server a deployment actually gets when a poison-sized request
-    * file lands, not just the happy path. */
-  private val StreamServeAxisEntry = "t53s_stream_serve"
-
-  private def streamServeAxis(spark: SparkSession, base: String,
-      factor: Int): Unit = {
-    import graft.similarity.{IndexStore, Similarity}
-    import graft.streaming.QueryServe
-    val docs = Tables(spark, base, "documents")
-    val emb = Tables(spark, base, "embeddings")
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_replay_sserve").toString
-    graft.text.Retrieval.buildIndex(spark, docs, s"$root/corpus")
-    val ivf = Similarity.buildIvfIndex(emb)
-    val pq = Similarity.buildPqIndex(emb)
-    IndexStore.saveIvf(ivf, s"$root/ivf")
-    IndexStore.savePq(pq, s"$root/pq")
-    ivf.release(); pq.release()
-    val wReq = org.apache.spark.sql.expressions.Window.orderBy("query_id")
-    val requests = docs
-      .select((col("doc_id") + 900000L).as("query_id"),
-        col("text").as("query_text"))
-      .join(emb.select((col("vec_id") + 900000L).as("query_id"),
-        col("embedding")), "query_id")
-      .withColumn("req_rank", row_number().over(wReq))
-    val corpusN = requests.count()
-    def drain(nq: Long, tag: String): Double = {
-      val dropDir = java.nio.file.Files
-        .createTempDirectory(s"graft_sserve_drop_$tag").toString
-      val resultsDir = java.nio.file.Files
-        .createTempDirectory(s"graft_sserve_res_$tag").toString
-      val ckpt = java.nio.file.Files
-        .createTempDirectory(s"graft_sserve_ck_$tag").toString
-      requests.filter(col("req_rank") <= nq).drop("req_rank")
-        .write.mode("append").parquet(dropDir)
-      val t0 = System.nanoTime()
-      val q = QueryServe.start(spark, dropDir, s"$root/corpus",
-        s"$root/ivf", s"$root/pq", resultsDir, ckpt)
-      q.processAllAvailable(); q.stop()
-      val sec = (System.nanoTime() - t0) / 1e9
-      val served = QueryServe.results(spark, resultsDir)
-        .select("query_id").distinct().count()
-      require(served == math.min(nq, corpusN),
-        s"stream served $served of $nq requests")
-      sec
-    }
-    val nqBase = 20L
-    val nqBig = math.min(nqBase * factor, corpusN)
-    drain(nqBase, "warm") // warmup (classload/codegen + store load), untimed
-    val tBase = drain(nqBase, "base")
-    // the big drop serves under a cap that forces the CHUNKED path —
-    // the degraded mode an oversized request file lands the server in
-    spark.conf.set("graft.similarity.maxBroadcastQueries",
-      math.max(1L, nqBig / 5).toString)
-    val tBig =
-      try drain(nqBig, "big")
-      finally spark.conf.unset("graft.similarity.maxBroadcastQueries")
-    val f = tBig / tBase
-    println(f"[replay] $StreamServeAxisEntry%-24s base=$tBase%7.1f s  " +
-      f"x${nqBig / nqBase}=$tBig%7.1f s  factor=$f%5.1f " +
-      f"(STREAMED-SERVER request axis: $nqBase -> $nqBig requests, " +
-      f"big drop chunked 5-way under a lowered cap, fixed stores over " +
-      f"$corpusN joined rows)")
-  }
-
-  def main(args: Array[String]): Unit = {
-    val base = args.lift(0).getOrElse("/root/testdata/sf0.1")
-    val out = args.lift(1).getOrElse("/tmp/graft_replay10")
-    val factor = args.lift(2).map(_.toInt).getOrElse(10)
-    val allEntries = args.lift(3).map(_.split(',').toSeq).getOrElse(defaultEntries)
-    // optional 5th arg: restrict the replica to these tables (the timed
-    // entries must not touch anything outside the list)
-    val tables = args.lift(4).map(_.split(',').map(_.trim).toSet)
-    val entries = allEntries
-      .filterNot(e =>
-        e == QueryAxisEntry || e == ServeAxisEntry || e == Bm25AxisEntry ||
-          e == StreamServeAxisEntry || e == PrfAxisEntry)
-    val spark = Engine.session("graft-scale-replay")
-    if (entries.nonEmpty || allEntries.contains(Bm25AxisEntry) ||
-      allEntries.contains(PrfAxisEntry))
-      replicate(spark, base, out, factor, tables)
-
-    if (allEntries.contains(ServeAxisEntry)) serveAxis(spark, base, factor)
-
-    if (allEntries.contains(StreamServeAxisEntry))
-      streamServeAxis(spark, base, factor)
-
-    // the BM25 decomposition rung runs against the REPLICATED corpus —
-    // its whole point is index-sized cold costs
-    if (allEntries.contains(Bm25AxisEntry)) bm25PruneAxis(spark, out)
-
-    // the PRF/LM rung also needs the replicated corpus: its point is
-    // the stage-2 fetch cost against an index-sized postings table
-    if (allEntries.contains(PrfAxisEntry)) prfAxis(spark, out)
-
-    if (allEntries.contains(QueryAxisEntry)) {
-      import graft.similarity.Similarity
-      val emb = Tables(spark, base, "embeddings")
-      val corpusN = emb.count()
-      val chunkBudget = 20
-      val nqBig = math.min(chunkBudget.toLong * factor, corpusN)
-      // indexes built ONCE, untimed — production is build-once/
-      // probe-many and this rung measures the probe's query axis
-      val ivf = Similarity.buildIvfIndex(emb)
-      val pq = Similarity.buildPqIndex(emb)
-      chunkedQueryOnce(spark, base, ivf, pq, chunkBudget.toLong,
-        chunkBudget) // warmup (classload/codegen), not timed
-      val tBase = chunkedQueryOnce(spark, base, ivf, pq,
-        chunkBudget.toLong, chunkBudget)
-      val tBig = chunkedQueryOnce(spark, base, ivf, pq, nqBig, chunkBudget)
-      ivf.release(); pq.release()
-      val f = tBig / tBase
-      println(f"[replay] $QueryAxisEntry%-24s base=$tBase%7.1f s  " +
-        f"x${nqBig / chunkBudget}=$tBig%7.1f s  factor=$f%5.1f " +
-        f"(QUERY axis: $chunkBudget -> $nqBig queries, fixed corpus " +
-        f"$corpusN, ${math.max(1L, nqBig / chunkBudget)} chunks)")
-    }
-
-    // warmup (classload/codegen) on the smallest SF, like Bench
-    entries.foreach { e =>
-      try runOnce(spark, e, "/root/testdata/sf0.001")
-      catch { case _: Throwable => () }
-    }
-    val rows = entries.map { e =>
-      // base first, then the replicated input; caches dropped between
-      // entries so one entry's shingle/signature reuse can't subsidize
-      // the next measurement
-      val tBase = runOnce(spark, e, base)
-      Caches.releaseAll(); graft.operators.Prefix.releaseAll()
-      val tBig = runOnce(spark, e, out)
-      Caches.releaseAll(); graft.operators.Prefix.releaseAll()
-      val f = tBig / tBase
-      println(f"[replay] $e%-24s base=$tBase%7.1f s  x$factor=$tBig%7.1f s  factor=$f%5.1f")
-      (e, tBase, tBig, f)
-    }
-    if (rows.nonEmpty) {
-      val worst = rows.maxBy(_._4)
-      println(f"[replay] worst factor: ${worst._1} ${worst._4}%.1f " +
-        f"(budget ${factor * 1.5}%.0f = factor×1.5 for shuffle growth)")
-    }
-    spark.stop()
   }
 }

@@ -244,8 +244,8 @@ object SparkEntry {
     graft.multimodal.MultimodalFixtures.queries
 
   /** The ONE registry of every runnable entry point — contract queries
-    * plus bench-only raw forms. Bench, Time, ScaleReplay, and the golden
-    * tooling all resolve through this so the unions cannot drift. */
+    * plus bench-only raw forms. `Explain` and the golden tooling both
+    * resolve through this so the unions cannot drift. */
   def all: Map[String, (SparkSession, String) => DataFrame] =
     queries ++ benchOnly
 

@@ -1,5 +1,7 @@
 package graft.etl
 
+import org.apache.hadoop.fs.Path
+
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 
 /** Star-schema storage: partitioned parquet replacing the reference's MySQL
@@ -19,8 +21,19 @@ object StarStore {
   def factSink(dir: String): VersionedFactSink =
     new VersionedFactSink(s"$dir/fact_streaming_summary")
 
-  /** Truncate-and-reload (S9): commit `fact` as the store's new version. */
-  def writeFact(fact: DataFrame, dir: String): Unit = factSink(dir).writeFull(fact)
+  /** The stream merge's raw valid rows ([[graft.streaming.StreamingIngest]]). */
+  def stagingDir(dir: String): String = s"$dir/staging_valid_txns"
+
+  /** Truncate-and-reload (S9): commit `fact` as the store's new version.
+    * The merge staging describes the replaced fact, so it goes first: a
+    * crash between the two steps leaves a committed fact without staging,
+    * which a new merger refuses instead of merging from stale rows. */
+  def writeFact(fact: DataFrame, dir: String): Unit = {
+    val staging = new Path(stagingDir(dir))
+    staging.getFileSystem(fact.sparkSession.sparkContext.hadoopConfiguration)
+      .delete(staging, true)
+    factSink(dir).writeFull(fact)
+  }
 
   def writeDims(dimDate: DataFrame, dimCountry: DataFrame,
       dimSport: DataFrame, dir: String): Unit = {

@@ -69,7 +69,7 @@ object Sources {
     * parity with an in-memory frame. */
   def jdbcTable(spark: SparkSession, url: String, table: String,
       partitionColumn: String, lowerBound: Long, upperBound: Long,
-      numPartitions: Int = 32): DataFrame =
+      numPartitions: Int): DataFrame =
     spark.read.format("jdbc")
       .option("url", url)
       .option("dbtable", table)

@@ -28,9 +28,9 @@ import graft.etl.{FactSink, Schemas, StarStore, Transform}
   * past date fold into its grain row, i.e. unbounded lateness tolerance
   * like the reference. Cost scales with the affected years' raw volume,
   * not total history. So the history must reach the fact through the
-  * merger, which refuses a fact loaded without staging. A reload AFTER
-  * streaming (`StarStore.writeFact` over a store with staging) is not
-  * caught: the next merge recomputes its years from the stale staging.
+  * merger, which refuses a fact loaded without staging. A reload after
+  * streaming (`StarStore.writeFact`) drops the staging with the fact it
+  * replaces, so the next merger refuses that store as well.
   *
   * One query per store: staged batches are named by `batchId`, and a query
   * started from a new checkpoint numbers its batches from 0 again, so it
@@ -40,8 +40,6 @@ import graft.etl.{FactSink, Schemas, StarStore, Transform}
   * the stream from its own checkpoint instead.
   */
 object StreamingIngest {
-
-  private def stagingOf(storeDir: String): String = s"$storeDir/staging_valid_txns"
 
   /** Per-batch merge logic, usable from foreachBatch or called directly.
     * The fact store is reached only through the [[graft.etl.FactSink]]
@@ -61,7 +59,7 @@ object StreamingIngest {
 
     factSink.recover()
 
-    private val stagingDir = stagingOf(storeDir)
+    private val stagingDir = StarStore.stagingDir(storeDir)
     // a merge recomputes its years from staging alone (see the object doc)
     if (factSink.currentVersion >= 0 && !Files.exists(Paths.get(stagingDir)))
       throw new IllegalStateException(s"the fact of $storeDir was loaded " +
@@ -103,7 +101,9 @@ object StreamingIngest {
         .filter(_.startsWith("year="))
         .map(_.stripPrefix("year=").toInt)
       if (years.nonEmpty) {
-        val raw = spark.read
+        // the staged schema is `valid`'s, so no merge runs a footer-inference
+        // job; `batch` still comes from the paths
+        val raw = spark.read.schema(valid.schema)
           .option("basePath", stagingDir).parquet(stagingDir)
           .filter(col("year").isin(years.map(Integer.valueOf): _*))
           .drop("year", "batch")
@@ -118,12 +118,11 @@ object StreamingIngest {
   def start(spark: SparkSession, dropDir: String, storeDir: String,
       assets: DataFrame, subscribers: DataFrame, postal2city: DataFrame,
       cities: DataFrame, checkpointDir: String,
-      trigger: Trigger = Trigger.AvailableNow(),
-      maxFilesPerTrigger: Option[Int] = None): StreamingQuery = {
+      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
     // a started query leaves `metadata` (its id) in its checkpoint
     val conf = spark.sparkContext.hadoopConfiguration
     val metadata = new Path(checkpointDir, "metadata")
-    val staging = new Path(stagingOf(storeDir))
+    val staging = new Path(StarStore.stagingDir(storeDir))
     val stagingFs = staging.getFileSystem(conf)
     if (!metadata.getFileSystem(conf).exists(metadata) && stagingFs.exists(staging) &&
         stagingFs.listStatus(staging).exists(_.getPath.getName.startsWith("batch=")))
@@ -133,13 +132,9 @@ object StreamingIngest {
     val merger = new FactMerger(spark, storeDir,
       Transform.userCountry(subscribers, postal2city, cities),
       Transform.assetSport(assets))
-    val reader = spark.readStream
+    spark.readStream
       .schema(Schemas.streamingTxns)
-    // bounds each micro-batch (AvailableNow honors source read limits) —
-    // a closed input then drains as several batches, exercising the merge
-    // path the way a live stream would instead of as one giant batch
-    maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
-    reader.parquet(dropDir)
+      .parquet(dropDir)
       .writeStream
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)

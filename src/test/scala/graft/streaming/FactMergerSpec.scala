@@ -76,6 +76,20 @@ class FactMergerSpec extends SparkTestBase {
     assert(e.getMessage.contains("seed the history through the merger"), e.getMessage)
   }
 
+  test("a reload over a streamed store drops its staging, so a new merger refuses it") {
+    // a merge recomputing 2022 from the first merge's staging would drop
+    // the two reloaded transactions
+    val store = Files.createTempDirectory("graft_reload_streamed").toString
+    new StreamingIngest.FactMerger(spark, store, userCountry("P1"), assetSport)
+      .mergeBatch(txn(1L, "2022-01-01"), 0L)
+    StarStore.writeFact(Transform.rollup(Transform.qualityGate(Transform.enrich(
+      txn(2L, "2022-01-02").unionByName(txn(3L, "2022-01-03")),
+      userCountry("P1"), assetSport))), store)
+    val e = intercept[IllegalStateException](
+      new StreamingIngest.FactMerger(spark, store, userCountry("P1"), assetSport))
+    assert(e.getMessage.contains("seed the history through the merger"), e.getMessage)
+  }
+
   test("a second stream over a staged store refuses to start; a restart over the first checkpoint merges") {
     val store = Files.createTempDirectory("graft_two_streams").toString
     def drop(rows: DataFrame*): String = {
